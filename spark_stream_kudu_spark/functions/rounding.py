@@ -58,11 +58,6 @@ def favg(sum_col: Column, count_col: Column, d: int, sum_decimals: int = 2) -> C
     return fround(snapped / count_col, d)
 
 
-def sql_favg(sum_expr: str, count_expr: str, d: int, sum_decimals: int = 2) -> str:
-    snapped = sql_fround(sum_expr, sum_decimals)
-    return sql_fround(f"{snapped} / ({count_expr})", d)
-
-
 def idiv(a: Column | int, b: Column | int) -> Column:
     """Integral division on longs (SQL ``div``) — exact by
     CONSTRUCTION, never routed through double (round-9/10 advisory

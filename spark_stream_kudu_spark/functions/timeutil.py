@@ -15,7 +15,3 @@ from pyspark.sql import functions as F
 def epoch_millis(ts: Column) -> Column:
     """TimestampType -> epoch milliseconds (BIGINT), truncating."""
     return F.unix_millis(ts)
-
-
-def millis_to_ts(ms: Column) -> Column:
-    return F.timestamp_millis(ms)

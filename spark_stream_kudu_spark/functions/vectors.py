@@ -44,10 +44,3 @@ def cosine_similarity(a: Column, b: Column) -> Column:
 def sql_dot(a: str, b: str) -> str:
     """DuckDB fragment: double-precision dot product."""
     return f"list_dot_product(CAST({a} AS DOUBLE[]), CAST({b} AS DOUBLE[]))"
-
-
-def sql_cosine(a: str, b: str) -> str:
-    return (
-        f"({sql_dot(a, b)} / "
-        f"(sqrt({sql_dot(a, a)}) * sqrt({sql_dot(b, b)})))"
-    )

@@ -254,19 +254,6 @@ def ppm_decode_features(docs: DataFrame) -> DataFrame:
     )
 
 
-def frame_offsets(d: DataFrame) -> DataFrame:
-    """Frame-sampling plumbing: per-payload list of byte offsets, one per
-    FRAME_BYTES window — the shape a video frame-sampler consumes."""
-    # float-by-design: oracle computes ceil(len / 256.0) in double
-    n = F.ceil(F.octet_length("payload") / F.lit(float(FRAME_BYTES))).cast("int")
-    return d.select(
-        "doc_id",
-        F.transform(F.sequence(F.lit(0), n - 1), lambda i: i * FRAME_BYTES).alias(
-            "offsets"
-        ),
-    )
-
-
 # --------------------------------------------------------------------------
 # Frame sampling (video-style strided access over binary payloads)
 # --------------------------------------------------------------------------

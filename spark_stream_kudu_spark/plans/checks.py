@@ -62,7 +62,11 @@ def has_partial_aggregate(df: DataFrame) -> bool:
 def python_eval_nodes(df: DataFrame) -> list[str]:
     """Plan nodes that cross into Python workers (should be empty for
     the relational core; only extension UDF paths may contain them)."""
-    plan = formatted_plan(df)
+    return python_eval_nodes_from_text(formatted_plan(df))
+
+
+def python_eval_nodes_from_text(plan: str) -> list[str]:
+    """``python_eval_nodes`` over an already-rendered formatted plan."""
     return [
         line.strip()
         for line in plan.splitlines()

@@ -21,7 +21,7 @@ mismatched bucket counts without an exchange).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 def write_bucketed(
@@ -46,7 +46,3 @@ def write_bucketed(
     if sort:
         w = w.sortBy(*keys)
     w.saveAsTable(name)
-
-
-def drop_table(spark: SparkSession, name: str) -> None:
-    spark.sql(f"DROP TABLE IF EXISTS {name}")

@@ -25,7 +25,6 @@ continuity is what the check pins.
 
 from __future__ import annotations
 
-import os
 from collections.abc import Iterator
 from typing import Any
 
@@ -44,6 +43,8 @@ from spark_stream_kudu_spark.session import tune_session
 from spark_stream_kudu_spark.sources.tables import load_table
 from spark_stream_kudu_spark.streaming.workdir import (
     new_run_dir,
+    replay_stream,
+    run_stream,
     stage_time_split_batches,
 )
 
@@ -154,22 +155,8 @@ def stream_zscore_anomaly_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev, base, ["2024-01-08", "2024-01-15", "2024-01-22"]
     )
 
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    scored = zscore_stateful(stream)
-    out = os.path.join(base, "out")
-    q = (
-        scored.writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    scored = zscore_stateful(replay_stream(spark, ev.schema, src))
+    out = run_stream(scored, base)
     return spark.read.parquet(out)
 
 
@@ -264,13 +251,6 @@ def cusum_stateful(rows: DataFrame, k_by_type: dict[str, int]) -> DataFrame:
     )._CUSUM_ORACLE,
 )
 def stream_cusum_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
-    from spark_stream_kudu_spark.streaming.workdir import (
-        new_run_dir,
-        stage_time_split_batches,
-    )
-
     tune_session(spark)
     ev = load_table(spark, sf_dir, "events").select("ts", "event_type", "value")
     # calibration: integer mean daily volume per type (historical pass)
@@ -289,9 +269,7 @@ def stream_cusum_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev, base, ["2024-01-08", "2024-01-15", "2024-01-22"]
     )
     stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+        replay_stream(spark, ev.schema, src)
         .select(
             "event_type",
             F.to_date("ts").alias("day"),
@@ -299,14 +277,5 @@ def stream_cusum_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     stats = cusum_stateful(stream, k_by_type)
-    out = os.path.join(base, "out")
-    q = (
-        stats.writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    out = run_stream(stats, base)
     return spark.read.parquet(out)

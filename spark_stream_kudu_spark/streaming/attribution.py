@@ -20,7 +20,6 @@ State is O(|users|) single structs regardless of stream age.
 
 from __future__ import annotations
 
-import os
 from collections.abc import Iterator
 from typing import Any
 
@@ -37,6 +36,8 @@ from spark_stream_kudu_spark.session import tune_session
 from spark_stream_kudu_spark.sources.tables import load_table
 from spark_stream_kudu_spark.streaming.workdir import (
     new_run_dir,
+    replay_stream,
+    run_stream,
     stage_time_split_batches,
 )
 
@@ -133,9 +134,7 @@ def stream_attribution_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+        replay_stream(spark, ev.schema, src)
         .select(
             F.unix_millis("ts").alias("t_ms"),
             "event_id",
@@ -145,16 +144,7 @@ def stream_attribution_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     credits = attribution_stateful(stream)
-    out = os.path.join(base, "out")
-    q = (
-        credits.writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    out = run_stream(credits, base)
     return (
         spark.read.parquet(out)
         .groupBy("touch_type")

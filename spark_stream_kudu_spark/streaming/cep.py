@@ -21,7 +21,6 @@ the batch window uses.
 
 from __future__ import annotations
 
-import os
 from collections.abc import Iterator
 from typing import Any
 
@@ -38,6 +37,8 @@ from spark_stream_kudu_spark.session import tune_session
 from spark_stream_kudu_spark.sources.tables import load_table
 from spark_stream_kudu_spark.streaming.workdir import (
     new_run_dir,
+    replay_stream,
+    run_stream,
     stage_time_split_batches,
 )
 
@@ -143,22 +144,8 @@ def stream_cep_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev, base, ["2024-01-08", "2024-01-15", "2024-01-22"]
     )
 
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    matches = cep_stateful(stream)
-    out = os.path.join(base, "out")
-    q = (
-        matches.writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    matches = cep_stateful(replay_stream(spark, ev.schema, src))
+    out = run_stream(matches, base)
     return spark.read.parquet(out).select("purchase_id", "user_id", "purchase_ms")
 
 
@@ -257,20 +244,6 @@ def stream_rate_limit_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev, base, ["2024-01-08", "2024-01-15", "2024-01-22"]
     )
 
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    admitted = quota_stateful(stream, _RATE_LIMIT_N)
-    out = os.path.join(base, "out")
-    q = (
-        admitted.writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    admitted = quota_stateful(replay_stream(spark, ev.schema, src), _RATE_LIMIT_N)
+    out = run_stream(admitted, base)
     return spark.read.parquet(out).select("user_id", "event_id", "event_type", "ts_ms")

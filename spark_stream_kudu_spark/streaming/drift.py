@@ -40,7 +40,13 @@ from spark_stream_kudu_spark.operators.series import _HOLT_ORACLE
 from spark_stream_kudu_spark.registry import register
 from spark_stream_kudu_spark.session import tune_session
 from spark_stream_kudu_spark.sources.tables import load_table
-from spark_stream_kudu_spark.streaming.workdir import new_run_dir, stage_mod_slices
+from spark_stream_kudu_spark.streaming.workdir import (
+    new_run_dir,
+    replay_stream,
+    run_stream,
+    stage_mod_slices,
+    stage_time_split_batches,
+)
 
 
 @register(
@@ -83,18 +89,7 @@ def stream_psi_drift_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         sink(partial, batch_id)
 
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    q = (
-        stream.writeStream.foreachBatch(per_batch)
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_stream(replay_stream(spark, ev.schema, src), base, per_batch)
     counts = sink.read(spark).select("event_type", "period", "bin", "c")
     return psi_from_counts(counts)
 
@@ -149,18 +144,7 @@ def stream_ks_drift_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         sink(partial, batch_id)
 
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    q = (
-        stream.writeStream.foreachBatch(per_batch)
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_stream(replay_stream(spark, ev.schema, src), base, per_batch)
     counts = sink.read(spark).select("event_type", "cents", "a", "b")
     return ks_from_value_counts(counts)
 
@@ -205,18 +189,7 @@ def stream_chisq_drift_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         sink(partial, batch_id)
 
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    q = (
-        stream.writeStream.foreachBatch(per_batch)
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_stream(replay_stream(spark, ev.schema, src), base, per_batch)
     return chisq_from_counts(sink.read(spark).select("event_type", "ca", "cb"))
 
 
@@ -314,8 +287,6 @@ def holt_stateful(events: DataFrame) -> DataFrame:
 def stream_holt_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    from spark_stream_kudu_spark.streaming.workdir import stage_time_split_batches
-
     tune_session(spark)
     ev = load_table(spark, sf_dir, "events").select(
         "ts",
@@ -329,22 +300,8 @@ def stream_holt_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = stage_time_split_batches(
         ev, base, ["2024-01-08", "2024-01-15", "2024-01-22"]
     )
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    folded = holt_stateful(stream)
-    out = os.path.join(base, "out")
-    q = (
-        folded.writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    folded = holt_stateful(replay_stream(spark, ev.schema, src))
+    out = run_stream(folded, base)
     rows = spark.read.parquet(out)
     w = Window.partitionBy("event_type").orderBy(F.desc("n_obs"))
     final = rows.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") == 1)

@@ -36,30 +36,19 @@ from spark_stream_kudu_spark.functions.rounding import idiv
 from spark_stream_kudu_spark.sources.tables import load_table
 from spark_stream_kudu_spark.streaming.joins import interval_join
 from spark_stream_kudu_spark.streaming.stateful import dedup_within_watermark
-from spark_stream_kudu_spark.streaming.workdir import new_run_dir, stage_mod_slices
+from spark_stream_kudu_spark.streaming.workdir import (
+    new_run_dir,
+    replay_stream,
+    run_stream,
+    stage_mod_slices,
+    stage_one_slice,
+)
 
 
 
 def _ev(spark: SparkSession, sf_dir: str) -> DataFrame:
     tune_session(spark)
     return load_table(spark, sf_dir, "events")
-
-
-def _run_to_parquet(stream_df: DataFrame, base: str) -> str:
-    """Drive a streaming DataFrame to a parquet append sink until all
-    available input is consumed; returns the output path."""
-    out = os.path.join(base, "out")
-    ckpt = os.path.join(base, "ckpt")
-    q = (
-        stream_df.writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return out
 
 
 _INTERVAL_JOIN_ORACLE = """
@@ -114,7 +103,7 @@ def stream_interval_join_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         p_stream, v_stream, key="user_id", left_ts="p_ts", right_ts="v_ts",
         horizon_sec=3600,
     )
-    out = _run_to_parquet(joined, base)
+    out = run_stream(joined, base)
     res = spark.read.parquet(out)
     return res.select(
         "purchase_id",
@@ -151,7 +140,7 @@ def stream_watermark_dedup_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     stream = spark.readStream.schema(ev.schema).parquet(src)
     deduped = dedup_within_watermark(stream, horizon="10 minutes")
-    out = _run_to_parquet(deduped, base)
+    out = run_stream(deduped, base)
     return spark.read.parquet(out).select(
         "user_id", "event_id", F.unix_millis("ts").alias("ts_ms"), "event_type"
     )
@@ -201,24 +190,10 @@ GROUP BY user_id, sess_id
     oracle=_SESSION_E2E_ORACLE,
 )
 def stream_session_window_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import glob
-    import shutil
-
     from spark_stream_kudu_spark.functions.rounding import fround
 
     ev = _ev(spark, sf_dir).select("user_id", "event_id", "ts", "value")
     base = new_run_dir("sess")
-    src = os.path.join(base, "src")
-    os.makedirs(src, exist_ok=True)
-
-    def stage(df: DataFrame, name: str, mtime: float) -> None:
-        tmp = os.path.join(base, f"stage_{name}")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
-        dest = os.path.join(src, f"{name}.parquet")
-        shutil.move(part, dest)
-        os.utime(dest, (mtime, mtime))
-
     sentinel = ev.sparkSession.createDataFrame(
         [(-1, -1)], "user_id long, event_id long"
     ).select(
@@ -230,16 +205,12 @@ def stream_session_window_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     # File-source order is modification time (oldest first): real events
     # form batch 0, the sentinel batch 1 so its watermark advance happens
     # after every real row is in state.
-    stage(ev, "batch_0", 1_000_000.0)
-    stage(sentinel, "batch_1", 1_000_100.0)
+    stage_one_slice(ev, base, 0)
+    src = stage_one_slice(sentinel, base, 1)
 
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
     sessions = (
-        stream.withWatermark("ts", "1 second")
+        replay_stream(spark, ev.schema, src)
+        .withWatermark("ts", "1 second")
         .groupBy("user_id", F.session_window("ts", "30 minutes").alias("w"))
         .agg(
             F.count(F.lit(1)).alias("n_events"),
@@ -252,7 +223,7 @@ def stream_session_window_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value",
         )
     )
-    out = _run_to_parquet(sessions, base)
+    out = run_stream(sessions, base)
     return spark.read.parquet(out).filter(F.col("user_id") >= 0)
 
 
@@ -314,18 +285,7 @@ def stream_rollup_incremental_e2e(spark: SparkSession, sf_dir: str) -> DataFrame
         )
         sink(partial, batch_id)
 
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    q = (
-        stream.writeStream.foreachBatch(per_batch)
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_stream(replay_stream(spark, ev.schema, src), base, per_batch)
     return sink.read(spark).select("bucket_ms", "event_type", "n_events", "value_e4")
 
 
@@ -393,7 +353,7 @@ def stream_enrich_static_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ts",
         "value",
     )
-    out = _run_to_parquet(enriched, base)
+    out = run_stream(enriched, base)
     return spark.read.parquet(out).select(
         "event_id",
         "user_id",
@@ -454,18 +414,7 @@ def stream_trending_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).agg(F.count(F.lit(1)).alias("n_events"))
         sink(partial, batch_id)
 
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    q = (
-        stream.writeStream.foreachBatch(per_batch)
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_stream(replay_stream(spark, ev.schema, src), base, per_batch)
 
     counts = sink.read(spark).select("bucket_ms", "event_type", "n_events")
     w = Window.partitionBy("bucket_ms").orderBy(
@@ -555,7 +504,7 @@ def stream_outer_interval_join_e2e(spark: SparkSession, sf_dir: str) -> DataFram
         p_stream, v_stream, key="user_id", left_ts="p_ts", right_ts="v_ts",
         horizon_sec=3600,
     )
-    out = _run_to_parquet(joined, base)
+    out = run_stream(joined, base)
     return (
         spark.read.parquet(out)
         .filter(F.col("user_id") >= 0)
@@ -663,7 +612,7 @@ def stream_full_outer_interval_join_e2e(
         p_stream, v_stream, key="user_id", left_ts="p_ts", right_ts="v_ts",
         horizon_sec=3600,
     )
-    out = _run_to_parquet(joined, base)
+    out = run_stream(joined, base)
     return (
         spark.read.parquet(out)
         .filter(F.col("user_id") >= 0)
@@ -725,18 +674,7 @@ def stream_media_decode_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         # (guide section 4).
         sink(ppm_decode_features(batch_df).localCheckpoint(eager=False), batch_id)
 
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    q = (
-        stream.writeStream.foreachBatch(per_batch)
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_stream(replay_stream(spark, docs.schema, src), base, per_batch)
     return sink.read(spark).select(
         "doc_id", "width", "height", "n_px", "r_sum", "g_sum", "b_sum"
     )
@@ -810,18 +748,7 @@ def stream_digest_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         sink(partial, batch_id)
 
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    q = (
-        stream.writeStream.foreachBatch(per_batch)
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_stream(replay_stream(spark, ev.schema, src), base, per_batch)
     return sink.read(spark).select(
         "event_type",
         "n_rows",
@@ -937,18 +864,7 @@ def stream_ann_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(out)
         )
 
-    stream = (
-        spark.readStream.schema(queries.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(q_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(per_batch)
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_stream(replay_stream(spark, queries.schema, q_dir), base, per_batch)
     return spark.read.parquet(out).select("qid", "neighbor_id", "adc_d2", "rank")
 
 
@@ -984,22 +900,8 @@ GROUP BY 1, 2
     oracle=_LATE_AUDIT_ORACLE,
 )
 def stream_late_audit_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import glob
-    import shutil
-
     ev = _ev(spark, sf_dir).select("user_id", "event_id", "ts", "event_type")
     base = new_run_dir("late")
-    src = os.path.join(base, "src")
-    os.makedirs(src, exist_ok=True)
-
-    def stage(df: DataFrame, name: str, mtime: float) -> None:
-        tmp = os.path.join(base, f"stage_{name}")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
-        dest = os.path.join(src, f"{name}.parquet")
-        shutil.move(part, dest)
-        os.utime(dest, (mtime, mtime))
-
     cutoff = F.lit(_LATE_CUTOFF).cast("timestamp")
     is_late = (F.col("event_id") % 11 == 3) & (F.col("ts") < cutoff)
     sentinel = ev.sparkSession.createDataFrame(
@@ -1019,23 +921,19 @@ def stream_late_audit_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     # is past every week-1 window, so the whole late slice drops
     # deterministically.
     mid = F.lit("2024-01-22").cast("timestamp")
-    stage(ev.filter((F.col("ts") < cutoff) & ~is_late), "batch_0", 1_000_000.0)
-    stage(
+    arrivals = [
+        ev.filter((F.col("ts") < cutoff) & ~is_late),
         ev.filter((F.col("ts") >= cutoff) & (F.col("ts") < mid)),
-        "batch_1",
-        1_000_100.0,
-    )
-    stage(ev.filter(F.col("ts") >= mid), "batch_2", 1_000_200.0)
-    stage(ev.filter(is_late), "batch_3", 1_000_300.0)
-    stage(sentinel, "batch_4", 1_000_400.0)
+        ev.filter(F.col("ts") >= mid),
+        ev.filter(is_late),
+        sentinel,
+    ]
+    for k, slice_df in enumerate(arrivals):
+        src = stage_one_slice(slice_df, base, k)
 
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
     daily = (
-        stream.withWatermark("ts", "1 hour")
+        replay_stream(spark, ev.schema, src)
+        .withWatermark("ts", "1 hour")
         .groupBy(F.window("ts", "1 day").alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(
@@ -1044,7 +942,7 @@ def stream_late_audit_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
         )
     )
-    out = _run_to_parquet(daily, base)
+    out = run_stream(daily, base)
     return spark.read.parquet(out).filter(
         F.col("day_ms") < F.unix_millis(F.to_timestamp(F.lit("2029-12-31")))
     )
@@ -1109,18 +1007,7 @@ def run_stream_hll(spark: SparkSession, sf_dir: str):
         )
         sink(partial, batch_id)
 
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    q = (
-        stream.writeStream.foreachBatch(per_batch)
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_stream(replay_stream(spark, ev.schema, src), base, per_batch)
     store = spark.read.parquet(os.path.join(base, "sketches", "data"))
     return ev, store
 
@@ -1187,18 +1074,7 @@ def stream_topk_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).mapInPandas(ss_summarize, ss_summary_schema())
         sink(summ, batch_id)
 
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    q = (
-        stream.writeStream.foreachBatch(per_batch)
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_stream(replay_stream(spark, docs.schema, src), base, per_batch)
     store = sink.read(spark).select("item", "est", "err", "pid", "absent_ub")
     all_toks = docs.select(F.explode(tokens(F.col("text"))).alias("item"))
     return ss_finalize_topk(all_toks, ss_merge_bounds(store))
@@ -1262,18 +1138,7 @@ def stream_quantile_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         sink(partial, batch_id)
 
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    q = (
-        stream.writeStream.foreachBatch(per_batch)
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_stream(replay_stream(spark, ev.schema, src), base, per_batch)
     bins = sink.read(spark).select("event_type", "bin_id", "lo16", "hi16", "c")
     return hq_quantiles_from_bins(bins, hq_exact_anchors(ev))
 
@@ -1336,18 +1201,7 @@ def stream_countmin_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         sink(partial, batch_id)
 
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    q = (
-        stream.writeStream.foreachBatch(per_batch)
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_stream(replay_stream(spark, docs.schema, src), base, per_batch)
     grid = sink.read(spark).select("r", "c", F.col("cnt").alias("cellsum"))
     all_toks = docs.select(F.explode(tokens(F.col("text"))).alias("item"))
     return cm_finalize_topk(all_toks, grid)
@@ -1418,18 +1272,7 @@ def stream_substring_audit_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         span_store.commit()
         doc_store.commit()
 
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    q = (
-        stream.writeStream.foreachBatch(per_batch)
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_stream(replay_stream(spark, docs.schema, src), base, per_batch)
     return substr_audit_from_spans(
         span_store.read(spark).select("doc_id", "pos", "gh"),
         doc_store.read(spark).select("doc_id", "n_tokens"),
@@ -1604,18 +1447,7 @@ def stream_incremental_dedup_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         pair_store.commit()
         band_store.commit()
 
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    q = (
-        stream.writeStream.foreachBatch(per_batch)
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_stream(replay_stream(spark, docs.schema, src), base, per_batch)
     out = pair_store.read(spark)
     if out is None:
         return spark.createDataFrame(
@@ -1664,15 +1496,10 @@ def stream_skew_audit_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         skew_summary_from_counts,
     )
     from spark_stream_kudu_spark.streaming.sinks import AdditiveRollupSink
-    from spark_stream_kudu_spark.streaming.workdir import (
-        new_run_dir,
-        stage_mod_slices,
-    )
 
     ev = _ev(spark, sf_dir).select("event_id", "user_id")
     base = new_run_dir("skew")
-    stage_mod_slices(ev, base, "event_id")
-    src = os.path.join(base, "src")
+    src = stage_mod_slices(ev, base, "event_id")
 
     sink = AdditiveRollupSink(
         os.path.join(base, "counts"), key=["key"], sum_cols=["n"]
@@ -1684,18 +1511,7 @@ def stream_skew_audit_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         sink(partial, batch_id)
 
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    q = (
-        stream.writeStream.foreachBatch(per_batch)
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_stream(replay_stream(spark, ev.schema, src), base, per_batch)
     counts = sink.read(spark).select("key", F.col("n").cast("long").alias("n"))
     return skew_summary_from_counts(counts, "user_id")
 
@@ -1730,17 +1546,12 @@ def _stream_contract_oracle() -> str:
 def stream_contract_gate_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     from spark_stream_kudu_spark.sources.tables import load_table
     from spark_stream_kudu_spark.streaming.sinks import AdditiveRollupSink
-    from spark_stream_kudu_spark.streaming.workdir import (
-        new_run_dir,
-        stage_mod_slices,
-    )
 
     tune_session(spark)
     o = load_table(spark, sf_dir, "orders")
     cust = load_table(spark, sf_dir, "customer").select("c_custkey")
     base = new_run_dir("contract")
-    stage_mod_slices(o, base, "o_orderkey")
-    src = os.path.join(base, "src")
+    src = stage_mod_slices(o, base, "o_orderkey")
 
     sink = AdditiveRollupSink(
         os.path.join(base, "report"),
@@ -1801,18 +1612,7 @@ def stream_contract_gate_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         sink(rules.unionByName(fk), batch_id)
 
-    stream = (
-        spark.readStream.schema(o.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    q = (
-        stream.writeStream.foreachBatch(per_batch)
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_stream(replay_stream(spark, o.schema, src), base, per_batch)
     return sink.read(spark).select(
         "rule",
         F.col("n_checked").cast("long").alias("n_checked"),
@@ -1852,10 +1652,6 @@ def stream_ivm_retraction_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     from spark_stream_kudu_spark.functions.hashing import md5_int32
     from spark_stream_kudu_spark.sources.tables import load_table
     from spark_stream_kudu_spark.streaming.sinks import AdditiveRollupSink
-    from spark_stream_kudu_spark.streaming.workdir import (
-        new_run_dir,
-        stage_mod_slices,
-    )
 
     tune_session(spark)
     o = load_table(spark, sf_dir, "orders")
@@ -1877,8 +1673,7 @@ def stream_ivm_retraction_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     run = new_run_dir("ivm")
-    stage_mod_slices(changes, run, "okey")
-    src = os.path.join(run, "src")
+    src = stage_mod_slices(changes, run, "okey")
 
     # The store holds DELTAS ONLY (the sink's replay marker rejects
     # out-of-order batch ids, so the MV seed merges at read time
@@ -1921,18 +1716,7 @@ def stream_ivm_retraction_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         sink(partial, batch_id)
 
-    stream = (
-        spark.readStream.schema(changes.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    q = (
-        stream.writeStream.foreachBatch(per_batch)
-        .option("checkpointLocation", os.path.join(run, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_stream(replay_stream(spark, changes.schema, src), run, per_batch)
     deltas = sink.read(spark).select(
         "status", F.col("dn").cast("long"), F.col("dcents").cast("long")
     )
@@ -1990,18 +1774,7 @@ def stream_bitmap_distinct_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     def per_batch(batch_df: DataFrame, batch_id: int) -> None:
         sink(bitmap_words(batch_df), batch_id)
 
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    q = (
-        stream.writeStream.foreachBatch(per_batch)
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_stream(replay_stream(spark, ev.schema, src), base, per_batch)
     store = spark.read.parquet(os.path.join(base, "words", "data"))
     return store.groupBy("event_type").agg(
         F.sum(F.bit_count("mask")).cast("long").alias("distinct_users")
@@ -2064,18 +1837,7 @@ def stream_global_rowid_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         sink(ids, batch_id)
 
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    q = (
-        stream.writeStream.foreachBatch(per_batch)
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_stream(replay_stream(spark, ev.schema, src), base, per_batch)
     return spark.read.parquet(os.path.join(base, "ids", "data")).select(
         "event_id", "rowid"
     )
@@ -2129,18 +1891,7 @@ def stream_seasonal_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).agg(F.count(F.lit(1)).cast("long").alias("cnt"))
         sink(partial, batch_id)
 
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    q = (
-        stream.writeStream.foreachBatch(per_batch)
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_stream(replay_stream(spark, ev.schema, src), base, per_batch)
     daily = spark.read.parquet(os.path.join(base, "daily", "data")).select(
         "day", F.col("cnt").cast("long").alias("cnt")
     )
@@ -2293,18 +2044,7 @@ def stream_semantic_dedup_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         dom_store.commit()
         member_store.commit()
 
-    stream = (
-        spark.readStream.schema(emb.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    q = (
-        stream.writeStream.foreachBatch(per_batch)
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_stream(replay_stream(spark, emb.schema, src), base, per_batch)
     from spark_stream_kudu_spark.functions.joins import gated_broadcast
 
     members = member_store.read(spark)
@@ -2512,18 +2252,7 @@ def stream_rate_limit_resume_e2e(
         return per_batch
 
     def run(phase: str) -> None:
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
-        q = (
-            stream.writeStream.foreachBatch(make_hook(phase))
-            .option("checkpointLocation", os.path.join(base, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        run_stream(replay_stream(spark, ev.schema, src), base, make_hook(phase))
 
     run("initial")
     for k in range(_RL_INITIAL, _RL_SLICES):

@@ -10,8 +10,10 @@ drop-in adapter for a *real* Kudu cluster when the ``kudu-spark``
 datasource jar is on the classpath (``--packages
 org.apache.kudu:kudu-spark3_2.12:<ver>``).
 
-Both sinks expose the same ``foreachBatch``-callable interface, so
-``run_traffic_pipeline`` (streaming/traffic.py) takes either:
+Both sinks expose the same ``foreachBatch``-callable interface, but
+``run_traffic_pipeline`` (streaming/traffic.py) always writes to an
+``UpsertParquetSink``; this adapter is a building block for a caller
+that wires its own query to a real cluster:
 
     sink = KuduUpsertSink(master="kudu-master:7051", table="traffic_conditions")
     query = parsed.writeStream.foreachBatch(sink).start()

@@ -30,6 +30,7 @@ from spark_stream_kudu_spark.streaming.workdir import new_run_dir
 from spark_stream_kudu_spark.streaming.traffic import (
     TRAFFIC_RAW_SCHEMA,
     parse_traffic,
+    read_traffic_conditions,
     run_traffic_pipeline,
 )
 
@@ -293,10 +294,7 @@ def stream_traffic_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         as_of_time_fn="content",  # stamp = max(measurement_time) of the batch
     )
     q.awaitTermination()
-    from spark_stream_kudu_spark.streaming.sinks import UpsertParquetSink
-
-    table = UpsertParquetSink(sink_path, key="as_of_time").read(spark)
-    return table.select(
+    return read_traffic_conditions(spark, sink_path).select(
         "as_of_time",
         "avg_num_veh",
         "min_num_veh",

@@ -22,7 +22,6 @@ state store, which is what the check pins.
 
 from __future__ import annotations
 
-import os
 from collections.abc import Iterator
 from typing import Any
 
@@ -34,6 +33,8 @@ from spark_stream_kudu_spark.session import tune_session
 from spark_stream_kudu_spark.sources.tables import load_table
 from spark_stream_kudu_spark.streaming.workdir import (
     new_run_dir,
+    replay_stream,
+    run_stream,
     stage_time_split_batches,
 )
 
@@ -145,20 +146,6 @@ def stream_scd2_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev, base, ["2024-01-08", "2024-01-15", "2024-01-22"]
     )
 
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    closed = scd2_stateful(stream)
-    out = os.path.join(base, "out")
-    q = (
-        closed.writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    closed = scd2_stateful(replay_stream(spark, ev.schema, src))
+    out = run_stream(closed, base)
     return spark.read.parquet(out)

@@ -26,7 +26,6 @@ timeout would silently restart their numbering and break parity.
 
 from __future__ import annotations
 
-import os
 from collections.abc import Iterator
 from typing import Any
 
@@ -43,6 +42,8 @@ from spark_stream_kudu_spark.session import tune_session
 from spark_stream_kudu_spark.sources.tables import load_table
 from spark_stream_kudu_spark.streaming.workdir import (
     new_run_dir,
+    replay_stream,
+    run_stream,
     stage_one_slice,
     time_slice,
 )
@@ -173,9 +174,7 @@ def stream_session_ttl_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         src = stage_one_slice(sent, base, 4 + j)
 
     stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+        replay_stream(spark, ev.schema, src)
         .withWatermark("ts", "0 seconds")
         .select(
             "ts",
@@ -185,16 +184,7 @@ def stream_session_ttl_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     closed = sessions_stateful(stream)
-    out = os.path.join(base, "out")
-    q = (
-        closed.writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    out = run_stream(closed, base)
     return (
         spark.read.parquet(out)
         .filter(F.col("user_id") != _SENTINEL_USER)

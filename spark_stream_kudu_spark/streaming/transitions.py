@@ -36,7 +36,11 @@ from spark_stream_kudu_spark.session import tune_session
 from spark_stream_kudu_spark.sources.tables import load_table
 from spark_stream_kudu_spark.streaming.workdir import (
     new_run_dir,
+    replay_stream,
+    run_stream,
+    stage_one_slice,
     stage_time_split_batches,
+    time_slice,
 )
 
 _OUT_SCHEMA = T.StructType(
@@ -114,22 +118,8 @@ def stream_transitions_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev, base, ["2024-01-08", "2024-01-15", "2024-01-22"]
     )
 
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    pairs = transitions_stateful(stream)
-    out = os.path.join(base, "out")
-    q = (
-        pairs.writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    pairs = transitions_stateful(replay_stream(spark, ev.schema, src))
+    out = run_stream(pairs, base)
     return (
         spark.read.parquet(out)
         .groupBy("prev_type", "next_type")
@@ -152,19 +142,12 @@ def stream_transitions_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=_TRANSITIONS_ORACLE,
 )
 def stream_transitions_restart_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from spark_stream_kudu_spark.streaming.workdir import (
-        stage_one_slice,
-        time_slice,
-    )
-
     tune_session(spark)
     ev = load_table(spark, sf_dir, "events").select(
         "ts", "event_id", "user_id", "event_type"
     )
     base = new_run_dir("trnr")
     src = os.path.join(base, "src")
-    out = os.path.join(base, "out")
-    ckpt = os.path.join(base, "ckpt")
 
     bounds = ["2024-01-08", "2024-01-15", "2024-01-22", None]
 
@@ -172,29 +155,16 @@ def stream_transitions_restart_e2e(spark: SparkSession, sf_dir: str) -> DataFram
         lo = bounds[k - 1] if k > 0 else None
         stage_one_slice(time_slice(ev, lo, bounds[k]), base, k)
 
-    def run_once() -> None:
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
-        q = (
-            transitions_stateful(stream)
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    def run_once() -> str:
+        pairs = transitions_stateful(replay_stream(spark, ev.schema, src))
+        return run_stream(pairs, base)
 
     stage(0)
     stage(1)
     run_once()  # weeks 1-2, then the query STOPS
     stage(2)
     stage(3)
-    run_once()  # NEW query, same checkpoint: state must be reloaded
+    out = run_once()  # NEW query, same checkpoint: state must be reloaded
     return (
         spark.read.parquet(out)
         .groupBy("prev_type", "next_type")

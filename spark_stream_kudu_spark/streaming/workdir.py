@@ -1,12 +1,20 @@
-"""Scratch-dir management for file-replay streaming queries.
+"""Scratch dirs, replay staging and the one stream runner for
+file-replay streaming queries.
 
 The end-to-end streaming queries (stream_traffic_pipeline, the
-streaming/extensions.py runs) each stage replay files, a checkpoint,
-and a sink under a fresh run directory in ``.tmp/``. Runs are
-independent, so old directories are garbage; this module hands out run
-dirs and reaps siblings older than an hour (long past the point their
-lazily-read result DataFrames were consumed) so repeated correctness /
-test runs don't grow the repo without bound.
+streaming/extensions.py runs and the stateful lifts) each stage replay
+files, a checkpoint, and a sink under a fresh run directory in
+``.tmp/``. ``replay_stream`` reads the staged files one per
+micro-batch, and ``run_stream`` is the one way a replay stream runs:
+it drives the stream over all available input and returns, with the
+checkpoint under ``base/ckpt`` and the query named after the run dir,
+so every job of every micro-batch carries the run name and batch id in
+its description.
+
+Runs are independent, so old directories are garbage; this module hands
+out run dirs and reaps siblings older than an hour (long past the point
+their lazily-read result DataFrames were consumed) so repeated
+correctness / test runs don't grow the repo without bound.
 """
 
 from __future__ import annotations
@@ -79,21 +87,11 @@ def stage_time_split_batches(df, base: str, bounds: list[str], ts_col: str = "ts
     the property the stateful e2e queries (anomaly, transitions) rely on
     for oracle parity with their batch window twins.
 
-    Returns the source directory to pass to ``spark.readStream``.
+    Returns the source directory to pass to :func:`replay_stream`.
     """
-    from pyspark.sql import functions as F
-
-    src = os.path.join(base, "src")
-    lo = None
-    for k, hi in enumerate([*bounds, None]):
-        part_df = df
-        if lo is not None:
-            part_df = part_df.filter(F.col(ts_col) >= F.lit(lo).cast("timestamp"))
-        if hi is not None:
-            part_df = part_df.filter(F.col(ts_col) < F.lit(hi).cast("timestamp"))
-        src = stage_one_slice(part_df, base, k)
-        lo = hi
-    return src
+    for k, (lo, hi) in enumerate(zip([None, *bounds], [*bounds, None])):
+        stage_one_slice(time_slice(df, lo, hi, ts_col), base, k)
+    return os.path.join(base, "src")
 
 
 def time_slice(df, lo: str | None, hi: str | None, ts_col: str = "ts"):
@@ -161,3 +159,43 @@ def stage_mod_slices(df, base: str, key_col: str, n: int = 4) -> str:
             )
         os.utime(dest, (1_000_000.0 + 100 * k,) * 2)
     return src
+
+
+def replay_stream(spark, schema, src: str):
+    """The replay source: the parquet files under ``src`` read one per
+    micro-batch (``maxFilesPerTrigger=1``), oldest mtime first."""
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(src)
+    )
+
+
+def run_stream(df, base: str, per_batch=None) -> str | None:
+    """Run the streaming DataFrame ``df`` over all available input
+    (``availableNow``), checkpointing under ``base/ckpt``, and return
+    once it has finished.
+
+    The query is named after the run dir, so Spark gives every job of
+    micro-batch N — including the jobs ``per_batch`` starts — a
+    description whose first line is the run dir's name and whose last
+    line is ``batch = N``.
+
+    With no ``per_batch`` the rows are appended as parquet to
+    ``base/out`` and that path is returned; otherwise each micro-batch
+    goes to ``foreachBatch(per_batch)`` and None is returned. A batch
+    that fails (a raising hook included) makes this raise."""
+    writer = (
+        df.writeStream.queryName(os.path.basename(base))
+        .option("checkpointLocation", os.path.join(base, "ckpt"))
+        .outputMode("append")
+        .trigger(availableNow=True)
+    )
+    out = None
+    if per_batch is None:
+        out = os.path.join(base, "out")
+        writer = writer.format("parquet").option("path", out)
+    else:
+        writer = writer.foreachBatch(per_batch)
+    writer.start().awaitTermination()
+    return out

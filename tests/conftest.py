@@ -26,3 +26,22 @@ def sf_smoke():
 @pytest.fixture(scope="session")
 def sf_oracle():
     return SF_ORACLE
+
+
+@pytest.fixture(scope="session")
+def registry_plans(spark, sf_smoke):
+    """name -> (formatted plan, executed-plan string) for every
+    registered query at the smoke scale. Building a query runs every
+    streaming e2e query to completion, so the registry-wide plan sweeps
+    share this one build pass and keep only the plan text."""
+    from spark_stream_kudu_spark.plans.checks import formatted_plan
+    from spark_stream_kudu_spark.registry import load_all
+
+    plans = {}
+    for name, spec in sorted(load_all().items()):
+        df = spec.builder(spark, sf_smoke)
+        plans[name] = (
+            formatted_plan(df),
+            df._jdf.queryExecution().executedPlan().toString(),
+        )
+    return plans

@@ -49,7 +49,7 @@ ALLOWED: dict[str, tuple[int, str]] = {
 }
 
 
-def test_registry_plan_lint(spark, sf_smoke):
+def test_registry_plan_lint(registry_plans):
     """ONE build pass over every registered query, two lints on the
     rendered prepared plan:
 
@@ -60,9 +60,7 @@ def test_registry_plan_lint(spark, sf_smoke):
        an unbroadcast cartesian is |A|x|B| shuffled work at 100 TB).
     """
     failures = []
-    for name, spec in sorted(ALL.items()):
-        df = spec.builder(spark, sf_smoke)
-        plan = df._jdf.queryExecution().executedPlan().toString()
+    for name, (_, plan) in sorted(registry_plans.items()):
         hits = checks.single_partition_order_ops_from_text(plan)
         allowed = ALLOWED.get(name, (0, ""))[0]
         if len(hits) > allowed:

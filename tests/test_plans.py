@@ -49,7 +49,7 @@ def test_aggregates_are_partial_final(spark, sf_smoke):
         assert checks.has_partial_aggregate(df), name
 
 
-def test_relational_core_never_enters_python(spark, sf_smoke):
+def test_relational_core_never_enters_python(registry_plans):
     """The hot path must stay JVM-side: no Python eval nodes in any
     relational/streaming-semantics/dedup/text plan. Only the explicitly
     vectorized extension kernels may cross the boundary."""
@@ -73,11 +73,10 @@ def test_relational_core_never_enters_python(spark, sf_smoke):
         # gaps-and-islands oracle shows the declarative hot-path form.
         "text_udtf_token_runs",
     }
-    for name, spec in ALL.items():
+    for name, (plan, _) in registry_plans.items():
         if name in allowed_python:
             continue
-        df = spec.builder(spark, sf_smoke)
-        nodes = checks.python_eval_nodes(df)
+        nodes = checks.python_eval_nodes_from_text(plan)
         assert not nodes, f"{name} crosses into Python: {nodes}"
 
 

@@ -19,6 +19,7 @@ from spark_stream_kudu_spark.streaming.sinks import UpsertParquetSink, merge_by_
 from spark_stream_kudu_spark.streaming.traffic import (
     TRAFFIC_RAW_SCHEMA,
     parse_traffic,
+    read_traffic_conditions,
     run_traffic_pipeline,
     traffic_aggregate,
     windowed_traffic_aggregate,
@@ -160,8 +161,7 @@ def test_pipeline_end_to_end(spark, mode):
         else None,
     )
     q.awaitTermination()
-    table = UpsertParquetSink(os.path.join(d, "sink"), key="as_of_time").read(spark)
-    rows = table.orderBy("as_of_time").collect()
+    rows = read_traffic_conditions(spark, os.path.join(d, "sink")).collect()
     if mode == "parity":
         # one row per micro-batch (3 files -> 3 batches); file->batch
         # order is not guaranteed, so compare as a set
@@ -648,3 +648,58 @@ def test_stream_bitmap_words_equal_batch_words_exactly(spark, sf_smoke):
         for r in spec.builder(spark, sf_smoke).collect()
     }
     assert final2 == final
+
+
+def test_run_stream_tags_batch_jobs_and_raises_hook_errors(spark):
+    """The one stream runner names the query after its run dir, so every
+    job of micro-batch N — including the jobs the foreachBatch hook
+    starts — carries the run name and ``batch = N`` in its description;
+    and a hook that raises fails the run instead of returning a partial
+    table."""
+    from spark_stream_kudu_spark.streaming.workdir import (
+        new_run_dir,
+        replay_stream,
+        run_stream,
+        stage_one_slice,
+    )
+
+    df = spark.range(4).select(F.col("id").alias("k"))
+
+    def staged(prefix):
+        base = new_run_dir(prefix)
+        for k in range(2):
+            src = stage_one_slice(df.filter(F.col("k") % 2 == k), base, k)
+        return base, replay_stream(spark, df.schema, src)
+
+    def jobs():
+        it = spark.sparkContext._jsc.sc().statusStore().jobsList(None).iterator()
+        while it.hasNext():
+            yield it.next()
+
+    base, stream = staged("runner")
+    first_job = max((j.jobId() for j in jobs()), default=-1) + 1
+    seen = []
+
+    def per_batch(batch_df, batch_id):
+        seen.append((batch_id, sorted(r["k"] for r in batch_df.collect())))
+
+    assert run_stream(stream, base, per_batch) is None
+    assert seen == [(0, [0, 2]), (1, [1, 3])]
+    descs = [
+        j.description().get() if j.description().isDefined() else None
+        for j in jobs()
+        if j.jobId() >= first_job
+    ]
+    assert descs
+    name = os.path.basename(base)
+    assert all(d is not None and d.startswith(name + "\n") for d in descs), descs
+    assert {d.splitlines()[-1] for d in descs} == {"batch = 0", "batch = 1"}
+
+    base, stream = staged("runner_fail")
+
+    def failing(batch_df, batch_id):
+        if batch_id == 1:
+            raise RuntimeError("hook failed on batch 1")
+
+    with pytest.raises(Exception, match="hook failed on batch 1"):
+        run_stream(stream, base, failing)
