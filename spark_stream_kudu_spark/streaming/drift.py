@@ -4,7 +4,7 @@ and ``q127_ks_drift``.
 The batch PSI reduces the event stream to a (event_type, period, bin)
 count grid before any float math; those counts are additive, so the
 operator lifts directly onto the incremental-rollup pattern
-(streaming/extensions.py's AdditiveRollupSink): each micro-batch
+(streaming/extensions.py's sum-combine sink): each micro-batch
 aggregates to count partials, the sink SUM-merges them into the keyed
 store, and PSI finalizes at read time over the tiny stored grid with
 the *same* finalize code the batch query uses (operators/drift.py
@@ -55,7 +55,7 @@ from spark_stream_kudu_spark.streaming.workdir import (
     "END-TO-END streaming drift monitor: events replayed as 4 parquet "
     "micro-batches; each batch reduces to (event_type, period, bin) count "
     "partials — the same canonical tagging expression as batch q125 — that "
-    "an AdditiveRollupSink SUM-merges into the keyed store; PSI finalizes "
+    "a sum-combine sink SUM-merges into the keyed store; PSI finalizes "
     "at read time over the stored grid with the batch query's own finalize "
     "code. Counts are additive and the replay marker makes the merge "
     "idempotent, so the result is batch-slicing-independent and equals the "
@@ -64,7 +64,7 @@ from spark_stream_kudu_spark.streaming.workdir import (
     oracle=_PSI_ORACLE,
 )
 def stream_psi_drift_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from spark_stream_kudu_spark.streaming.sinks import AdditiveRollupSink
+    from spark_stream_kudu_spark.streaming.sinks import UpsertParquetSink
 
     tune_session(spark)
     ev = load_table(spark, sf_dir, "events").select("event_id", "ts", "event_type", "value")
@@ -75,10 +75,10 @@ def stream_psi_drift_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     # this slicing exercises exactly that.
     src = stage_mod_slices(ev, base, "event_id")
 
-    sink = AdditiveRollupSink(
+    sink = UpsertParquetSink(
         os.path.join(base, "counts"),
         key=["event_type", "period", "bin"],
-        sum_cols=["c"],
+        combine="sum",
     )
 
     def per_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -104,7 +104,7 @@ def stream_psi_drift_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     "streaming",
     "END-TO-END streaming Kolmogorov-Smirnov monitor: each micro-batch "
     "reduces to (event_type, cents, a, b) tag-count partials that the "
-    "AdditiveRollupSink SUM-merges into the keyed store — exactly the "
+    "sum-combine sink SUM-merges into the keyed store — exactly the "
     "'pre-aggregate to (type, cents, tag counts) first' scale path the "
     "batch q127 docstring prescribes — and the RANGE-frame ECDF finalize "
     "runs at read time over the stored value histogram instead of raw "
@@ -117,7 +117,7 @@ def stream_psi_drift_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=_KS_ORACLE,
 )
 def stream_ks_drift_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from spark_stream_kudu_spark.streaming.sinks import AdditiveRollupSink
+    from spark_stream_kudu_spark.streaming.sinks import UpsertParquetSink
 
     tune_session(spark)
     ev = load_table(spark, sf_dir, "events").select(
@@ -130,10 +130,10 @@ def stream_ks_drift_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     # this slicing exercises exactly that.
     src = stage_mod_slices(ev, base, "event_id")
 
-    sink = AdditiveRollupSink(
+    sink = UpsertParquetSink(
         os.path.join(base, "counts"),
         key=["event_type", "cents"],
-        sum_cols=["a", "b"],
+        combine="sum",
     )
 
     def per_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -166,7 +166,7 @@ def stream_ks_drift_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=_CHISQ_ORACLE,
 )
 def stream_chisq_drift_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from spark_stream_kudu_spark.streaming.sinks import AdditiveRollupSink
+    from spark_stream_kudu_spark.streaming.sinks import UpsertParquetSink
 
     tune_session(spark)
     ev = load_table(spark, sf_dir, "events").select("event_id", "ts", "event_type")
@@ -177,8 +177,8 @@ def stream_chisq_drift_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     # this slicing exercises exactly that.
     src = stage_mod_slices(ev, base, "event_id")
 
-    sink = AdditiveRollupSink(
-        os.path.join(base, "counts"), key=["event_type"], sum_cols=["ca", "cb"]
+    sink = UpsertParquetSink(
+        os.path.join(base, "counts"), key=["event_type"], combine="sum"
     )
     split = F.lit(_DRIFT_SPLIT).cast("timestamp")
 

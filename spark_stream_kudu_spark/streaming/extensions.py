@@ -15,7 +15,7 @@ deterministic and therefore DuckDB-oracle-checkable:
 
 - ``stream_rollup_incremental_e2e`` — an incrementally-maintained
   minute rollup: per-batch partial aggregates SUM-merged into a keyed
-  store (AdditiveRollupSink), the streaming continuous-aggregate
+  store (sum-combine sink), the streaming continuous-aggregate
   pattern; the final table equals the one-shot batch rollup.
 
 The join/dedup helpers previously had only pytest evidence; registering
@@ -249,7 +249,7 @@ GROUP BY 1, 2
     "END-TO-END incrementally-maintained minute rollup (the streaming form "
     "of the q59 continuous-aggregate pattern): events replayed as 4 parquet "
     "micro-batches; each batch aggregates to (minute-bucket, event_type) "
-    "partials that an AdditiveRollupSink SUM-merges into the keyed store — "
+    "partials that a sum-combine sink SUM-merges into the keyed store — "
     "additive merge is commutative/associative, so the final table is "
     "batch-boundary-independent and equals the one-shot batch rollup the "
     "oracle computes. Idempotent-replay marker prevents double-counting; "
@@ -259,7 +259,7 @@ GROUP BY 1, 2
 )
 def stream_rollup_incremental_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 
-    from spark_stream_kudu_spark.streaming.sinks import AdditiveRollupSink
+    from spark_stream_kudu_spark.streaming.sinks import UpsertParquetSink
 
     ev = _ev(spark, sf_dir).select("event_id", "ts", "event_type", "value")
     base = new_run_dir("roll")
@@ -267,10 +267,10 @@ def stream_rollup_incremental_e2e(spark: SparkSession, sf_dir: str) -> DataFrame
     # staged executor-side in ONE scan (no driver collect).
     src = stage_mod_slices(ev, base, "event_id")
 
-    sink = AdditiveRollupSink(
+    sink = UpsertParquetSink(
         os.path.join(base, "rollup"),
         key=["bucket_ms", "event_type"],
-        sum_cols=["n_events", "value_e4"],
+        combine="sum",
     )
 
     def per_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -381,7 +381,7 @@ def _trend_oracle() -> str:
     "streaming",
     "END-TO-END streaming trending leaderboard: events replayed as 4 "
     "micro-batches; each batch counts (hourly-bucket, event_type) "
-    "partials that an AdditiveRollupSink SUM-merges (commutative, so the "
+    "partials that a sum-combine sink SUM-merges (commutative, so the "
     "store is batch-boundary-independent), and the top-3 rank runs at "
     "READ time over the |windows| x |types| rollup — never over raw "
     "events. The streaming twin of q84_trending, value-equal to its "
@@ -395,16 +395,16 @@ def stream_trending_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     from spark_stream_kudu_spark.operators.analytics import _TREND_K
-    from spark_stream_kudu_spark.streaming.sinks import AdditiveRollupSink
+    from spark_stream_kudu_spark.streaming.sinks import UpsertParquetSink
 
     ev = _ev(spark, sf_dir).select("event_id", "ts", "event_type")
     base = new_run_dir("trend")
     src = stage_mod_slices(ev, base, "event_id")
 
-    sink = AdditiveRollupSink(
+    sink = UpsertParquetSink(
         os.path.join(base, "counts"),
         key=["bucket_ms", "event_type"],
-        sum_cols=["n_events"],
+        combine="sum",
     )
 
     def per_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -720,16 +720,16 @@ GROUP BY event_type
 def stream_digest_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from spark_stream_kudu_spark.functions.hashing import md5_int32
-    from spark_stream_kudu_spark.streaming.sinks import AdditiveRollupSink
+    from spark_stream_kudu_spark.streaming.sinks import UpsertParquetSink
 
     ev = _ev(spark, sf_dir).select("event_id", "user_id", "event_type", "ts", "value")
     base = new_run_dir("dig")
     src = stage_mod_slices(ev, base, "event_id")
 
-    sink = AdditiveRollupSink(
+    sink = UpsertParquetSink(
         os.path.join(base, "digest"),
         key=["event_type"],
-        sum_cols=["n_rows", "digest_sum"],
+        combine="sum",
     )
 
     row = F.concat_ws(
@@ -953,9 +953,9 @@ def stream_late_audit_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     "streaming",
     "END-TO-END streaming cardinality without identities: each "
     "micro-batch reduces to ONE HLL sketch per event_type "
-    "(hll_sketch_agg of user_id) and a SketchUnionSink register-max-"
-    "merges it into the keyed store. Union is commutative, associative "
-    "AND idempotent, so the final estimate is bit-identical to the "
+    "(hll_sketch_agg of user_id) and an hll_union_agg-combine sink "
+    "register-max-merges it into the keyed store. Union is commutative, "
+    "associative AND idempotent, so the final estimate is bit-identical to the "
     "one-shot batch sketch for ANY batch slicing (pinned exactly by "
     "the invariant test). Oracle-checkable since round 4 via the same "
     "exact-anchor pattern as the batch sketch family: each key carries "
@@ -991,14 +991,14 @@ def run_stream_hll(spark: SparkSession, sf_dir: str):
     Split out so the bit-equality invariant test can read the raw
     merged sketches (the registered query finalizes to exact-anchor +
     flag columns for the oracle gate)."""
-    from spark_stream_kudu_spark.streaming.sinks import SketchUnionSink
+    from spark_stream_kudu_spark.streaming.sinks import UpsertParquetSink
 
     ev = _ev(spark, sf_dir).select("event_id", "event_type", "user_id")
     base = new_run_dir("hll")
     src = stage_mod_slices(ev, base, "event_id")
 
-    sink = SketchUnionSink(
-        os.path.join(base, "sketches"), key="event_type", sketch_col="sk"
+    sink = UpsertParquetSink(
+        os.path.join(base, "sketches"), key="event_type", combine="hll_union_agg"
     )
 
     def per_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -1008,7 +1008,7 @@ def run_stream_hll(spark: SparkSession, sf_dir: str):
         sink(partial, batch_id)
 
     run_stream(replay_stream(spark, ev.schema, src), base, per_batch)
-    store = spark.read.parquet(os.path.join(base, "sketches", "data"))
+    store = sink.read(spark)
     return ev, store
 
 
@@ -1096,7 +1096,7 @@ def _hq_oracle() -> str:
     "streaming",
     "END-TO-END streaming percentiles: each micro-batch reduces to "
     "(event_type, bin) counts on the q163 log-linear grid (integer "
-    "boundary arithmetic, no ln()) and an AdditiveRollupSink "
+    "boundary arithmetic, no ln()) and a sum-combine sink "
     "SUM-merges them into the keyed store; the percentile finalize "
     "runs at read time over the stored grid with the batch sketch's "
     "own code. Counts are additive and replay-idempotent, so the "
@@ -1112,17 +1112,17 @@ def stream_quantile_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         hq_exact_anchors,
         hq_quantiles_from_bins,
     )
-    from spark_stream_kudu_spark.streaming.sinks import AdditiveRollupSink
+    from spark_stream_kudu_spark.streaming.sinks import UpsertParquetSink
 
     tune_session(spark)
     ev = load_table(spark, sf_dir, "events").select("event_id", "event_type", "value")
     base = new_run_dir("hq")
     src = stage_mod_slices(ev, base, "event_id")
 
-    sink = AdditiveRollupSink(
+    sink = UpsertParquetSink(
         os.path.join(base, "bins"),
         key=["event_type", "bin_id", "lo16", "hi16"],
-        sum_cols=["c"],
+        combine="sum",
     )
 
     def per_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -1160,7 +1160,7 @@ def _cm_oracle() -> str:
     "END-TO-END streaming Count-Min: the corpus replayed as 4 document "
     "micro-batches; each batch's token stream folds through the SAME "
     "Arrow kernel as batch q178 into per-partition d x w grids, reduced "
-    "to one per-batch (r, c) count partial that an AdditiveRollupSink "
+    "to one per-batch (r, c) count partial that a sum-combine sink "
     "SUM-merges into the keyed cell store — cell-wise addition IS the "
     "Count-Min merge, so the stored grid equals the one-shot batch grid "
     "for any batch slicing, and replay is idempotent because the sink "
@@ -1179,15 +1179,15 @@ def stream_countmin_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         cm_grid_schema,
         cm_summarize,
     )
-    from spark_stream_kudu_spark.streaming.sinks import AdditiveRollupSink
+    from spark_stream_kudu_spark.streaming.sinks import UpsertParquetSink
 
     tune_session(spark)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     base = new_run_dir("scm")
     src = stage_mod_slices(docs, base, "doc_id")
 
-    sink = AdditiveRollupSink(
-        os.path.join(base, "cells"), key=["r", "c"], sum_cols=["cnt"]
+    sink = UpsertParquetSink(
+        os.path.join(base, "cells"), key=["r", "c"], combine="sum"
     )
 
     def per_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -1244,7 +1244,7 @@ def stream_substring_audit_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         substr_doc_sizes,
         substr_spans,
     )
-    from spark_stream_kudu_spark.streaming.sinks import UpsertParquetSink
+    from spark_stream_kudu_spark.streaming.sinks import UpsertParquetSink, upsert_stores
 
     tune_session(spark)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -1259,18 +1259,13 @@ def stream_substring_audit_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     def per_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        # The two store writes are data-independent (both derive from
-        # batch_df and read only their OWN store) — stage them as
-        # concurrent driver-thread jobs and promote after both finish
-        # (round-12, guide §2.6; sinks.py compute/commit separation).
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            f_span = pool.submit(span_store.compute, substr_spans(batch_df), batch_id)
-            f_doc = pool.submit(doc_store.compute, substr_doc_sizes(batch_df), batch_id)
-            f_span.result(), f_doc.result()
-        span_store.commit()
-        doc_store.commit()
+        # Neither store's input reads the other store, so either commit
+        # order replays correctly.
+        upsert_stores(
+            batch_id,
+            (span_store, substr_spans(batch_df)),
+            (doc_store, substr_doc_sizes(batch_df)),
+        )
 
     run_stream(replay_stream(spark, docs.schema, src), base, per_batch)
     return substr_audit_from_spans(
@@ -1352,7 +1347,7 @@ def stream_incremental_dedup_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         SHINGLE_N,
         _minhash_bands,
     )
-    from spark_stream_kudu_spark.streaming.sinks import UpsertParquetSink
+    from spark_stream_kudu_spark.streaming.sinks import UpsertParquetSink, upsert_stores
 
     tune_session(spark)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -1431,21 +1426,12 @@ def stream_incremental_dedup_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             .localCheckpoint(eager=False)
         )
         # ``prev`` is this batch's read of the band store and nothing
-        # wrote it since — hand it to the sink so the store is
-        # listed/planned once per batch (round-11). Overlap the two
-        # store writes (round-12, guide §2.6): the verified-pairs job
-        # reads the band store (via ``prev`` in the candidate plan), so
-        # it could never overlap the band store's PROMOTION — but with
-        # compute/commit separated both jobs only read live directories
-        # and stage aside; the renames run after both finish.
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            f_pair = pool.submit(pair_store.compute, verified, batch_id)
-            f_band = pool.submit(band_store.compute, bands, batch_id, prev)
-            f_pair.result(), f_band.result()
-        pair_store.commit()
-        band_store.commit()
+        # wrote it since — hand it to the sink so the store is planned
+        # once per batch. The verified pairs read the band store (via
+        # ``prev``), so the band store commits last.
+        upsert_stores(
+            batch_id, (pair_store, verified), (band_store, bands, prev)
+        )
 
     run_stream(replay_stream(spark, docs.schema, src), base, per_batch)
     out = pair_store.read(spark)
@@ -1495,14 +1481,14 @@ def stream_skew_audit_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     from spark_stream_kudu_spark.operators.profiling import (
         skew_summary_from_counts,
     )
-    from spark_stream_kudu_spark.streaming.sinks import AdditiveRollupSink
+    from spark_stream_kudu_spark.streaming.sinks import UpsertParquetSink
 
     ev = _ev(spark, sf_dir).select("event_id", "user_id")
     base = new_run_dir("skew")
     src = stage_mod_slices(ev, base, "event_id")
 
-    sink = AdditiveRollupSink(
-        os.path.join(base, "counts"), key=["key"], sum_cols=["n"]
+    sink = UpsertParquetSink(
+        os.path.join(base, "counts"), key=["key"], combine="sum"
     )
 
     def per_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -1545,7 +1531,7 @@ def _stream_contract_oracle() -> str:
 )
 def stream_contract_gate_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     from spark_stream_kudu_spark.sources.tables import load_table
-    from spark_stream_kudu_spark.streaming.sinks import AdditiveRollupSink
+    from spark_stream_kudu_spark.streaming.sinks import UpsertParquetSink
 
     tune_session(spark)
     o = load_table(spark, sf_dir, "orders")
@@ -1553,10 +1539,10 @@ def stream_contract_gate_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = new_run_dir("contract")
     src = stage_mod_slices(o, base, "o_orderkey")
 
-    sink = AdditiveRollupSink(
+    sink = UpsertParquetSink(
         os.path.join(base, "report"),
         key=["rule"],
-        sum_cols=["n_checked", "n_violations"],
+        combine="sum",
     )
 
     def per_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -1651,7 +1637,7 @@ def _stream_ivm_oracle() -> str:
 def stream_ivm_retraction_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     from spark_stream_kudu_spark.functions.hashing import md5_int32
     from spark_stream_kudu_spark.sources.tables import load_table
-    from spark_stream_kudu_spark.streaming.sinks import AdditiveRollupSink
+    from spark_stream_kudu_spark.streaming.sinks import UpsertParquetSink
 
     tune_session(spark)
     o = load_table(spark, sf_dir, "orders")
@@ -1678,8 +1664,8 @@ def stream_ivm_retraction_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The store holds DELTAS ONLY (the sink's replay marker rejects
     # out-of-order batch ids, so the MV seed merges at read time
     # instead of being injected as a fake batch).
-    sink = AdditiveRollupSink(
-        os.path.join(run, "deltas"), key=["status"], sum_cols=["dn", "dcents"]
+    sink = UpsertParquetSink(
+        os.path.join(run, "deltas"), key=["status"], combine="sum"
     )
     mv0 = base.groupBy("status").agg(
         F.count(F.lit(1)).cast("long").alias("dn"),
@@ -1749,7 +1735,7 @@ FROM events GROUP BY event_type
     "END-TO-END streaming EXACT distinct counting: each micro-batch "
     "reduces to (event_type, word, mask) bitmap partials (word = "
     "user_id div 63, mask = OR of single-bit words — q179's kernel) "
-    "and a BitmapOrSink bitwise-OR-merges them into the keyed store. "
+    "and a bit_or-combine sink bitwise-OR-merges them into the keyed store. "
     "OR is commutative, associative AND idempotent, so the final "
     "popcount equals the one-shot batch distinct count for ANY batch "
     "slicing, merge order, or replay — the exact counterpart of "
@@ -1761,21 +1747,21 @@ FROM events GROUP BY event_type
 )
 def stream_bitmap_distinct_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     from spark_stream_kudu_spark.operators.sketches import bitmap_words
-    from spark_stream_kudu_spark.streaming.sinks import BitmapOrSink
+    from spark_stream_kudu_spark.streaming.sinks import UpsertParquetSink
 
     ev = _ev(spark, sf_dir).select("event_id", "event_type", "user_id")
     base = new_run_dir("bitmap")
     src = stage_mod_slices(ev, base, "event_id")
 
-    sink = BitmapOrSink(
-        os.path.join(base, "words"), key=["event_type", "word"]
+    sink = UpsertParquetSink(
+        os.path.join(base, "words"), key=["event_type", "word"], combine="bit_or"
     )
 
     def per_batch(batch_df: DataFrame, batch_id: int) -> None:
         sink(bitmap_words(batch_df), batch_id)
 
     run_stream(replay_stream(spark, ev.schema, src), base, per_batch)
-    store = spark.read.parquet(os.path.join(base, "words", "data"))
+    store = sink.read(spark)
     return store.groupBy("event_type").agg(
         F.sum(F.bit_count("mask")).cast("long").alias("distinct_users")
     )
@@ -1838,9 +1824,7 @@ def stream_global_rowid_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         sink(ids, batch_id)
 
     run_stream(replay_stream(spark, ev.schema, src), base, per_batch)
-    return spark.read.parquet(os.path.join(base, "ids", "data")).select(
-        "event_id", "rowid"
-    )
+    return sink.read(spark).select("event_id", "rowid")
 
 
 # --------------------------------------------------------------------------
@@ -1859,7 +1843,7 @@ def _seasonal_oracle() -> str:
     "streaming",
     "END-TO-END streaming seasonal decomposition: each micro-batch "
     "reduces to per-day partial counts that SUM-merge into the keyed "
-    "daily store (AdditiveRollupSink — addition IS the daily-rollup "
+    "daily store (sum-combine sink — addition IS the daily-rollup "
     "merge, so the store equals the one-shot series for any batch "
     "slicing, replay-guarded by the batch marker), and the finalize "
     "runs q183's integer-exact trend/seasonal/residual decomposition "
@@ -1875,14 +1859,14 @@ def stream_seasonal_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     from spark_stream_kudu_spark.operators.series import (
         seasonal_decompose_from_daily,
     )
-    from spark_stream_kudu_spark.streaming.sinks import AdditiveRollupSink
+    from spark_stream_kudu_spark.streaming.sinks import UpsertParquetSink
 
     ev = _ev(spark, sf_dir).select("event_id", "ts")
     base = new_run_dir("seas")
     src = stage_mod_slices(ev, base, "event_id")
 
-    sink = AdditiveRollupSink(
-        os.path.join(base, "daily"), key="day", sum_cols=["cnt"]
+    sink = UpsertParquetSink(
+        os.path.join(base, "daily"), key="day", combine="sum"
     )
 
     def per_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -1892,7 +1876,7 @@ def stream_seasonal_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         sink(partial, batch_id)
 
     run_stream(replay_stream(spark, ev.schema, src), base, per_batch)
-    daily = spark.read.parquet(os.path.join(base, "daily", "data")).select(
+    daily = sink.read(spark).select(
         "day", F.col("cnt").cast("long").alias("cnt")
     )
     return seasonal_decompose_from_daily(daily)
@@ -1956,10 +1940,7 @@ def stream_semantic_dedup_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         km_assign_dist,
         trained_codebook,
     )
-    from spark_stream_kudu_spark.streaming.sinks import (
-        AdditiveRollupSink,
-        UpsertParquetSink,
-    )
+    from spark_stream_kudu_spark.streaming.sinks import UpsertParquetSink, upsert_stores
 
     tune_session(spark)
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
@@ -1968,8 +1949,8 @@ def stream_semantic_dedup_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = stage_mod_slices(emb, base, "vec_id")
 
     member_store = UpsertParquetSink(os.path.join(base, "members"), key=["vec_id"])
-    dom_store = AdditiveRollupSink(
-        os.path.join(base, "doms"), key=["vec_id"], sum_cols=["n_dominators"]
+    dom_store = UpsertParquetSink(
+        os.path.join(base, "doms"), key=["vec_id"], combine="sum"
     )
 
     def _prep(batch_df: DataFrame) -> DataFrame:
@@ -2009,40 +1990,19 @@ def stream_semantic_dedup_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the batch's first action and materializes the cut — the eager
         # form paid one extra blocking job per micro-batch.
         new = _prep(batch_df).localCheckpoint(eager=False)
-        # The credits partial is handed to the dominator sink UNCUT:
-        # aggregate-merge sinks lazy-cut their input themselves
-        # (sinks.py ``_cut_input`` — the round-11 generalization of the
-        # caller-side cut that first landed here: without it the
-        # empty-batch guard and the store write EACH ran the full
-        # within+cross pair pipeline, 82 -> 75 jobs per query run).
-        # One member-store read per batch (round-11): the credits'
-        # ``prev`` and the upsert-merge's ``current`` are the same table
-        # version (nothing writes the member store in between), so the
-        # pre-read DataFrame is handed to the sink instead of letting it
-        # list/plan the store a second time.
+        # The credits partial is handed to the dominator store UNCUT:
+        # an aggregate store lazy-cuts its input itself (sinks.py
+        # ``_cut_input``). One member-store read per batch: the
+        # credits' ``prev`` and the upsert-merge's ``current`` are the
+        # same version (nothing writes the member store in between), so
+        # the pre-read DataFrame is handed to the sink.
         prev = member_store.read(spark)
         partial = semantic_batch_credits(spark, new, prev)
-        # Overlap the two data-independent store writes (round-12,
-        # guide §2.6): the credits job and the member merge job read
-        # only LIVE store directories and stage into private side
-        # directories (sinks.py compute/commit separation), so they can
-        # run as concurrent driver-thread jobs — the second job's tasks
-        # back-fill executors freed by the first job's tail. Promotion
-        # (the renames) happens strictly after BOTH jobs finish: the
-        # credits plan reads the member store, so promoting it
-        # mid-flight would yank files from under the running job —
-        # exactly the race the old sequential form existed to avoid.
-        # `new` is already materialized here (the credits size-gate
-        # count was its first action), so the threads share the
-        # checkpointed partitions rather than recomputing them.
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            f_dom = pool.submit(dom_store.compute, partial, batch_id)
-            f_mem = pool.submit(member_store.compute, new, batch_id, prev)
-            f_dom.result(), f_mem.result()
-        dom_store.commit()
-        member_store.commit()
+        # The credits read the member store (via ``prev``), so the
+        # member store commits last.
+        upsert_stores(
+            batch_id, (dom_store, partial), (member_store, new, prev)
+        )
 
     run_stream(replay_stream(spark, emb.schema, src), base, per_batch)
     from spark_stream_kudu_spark.functions.joins import gated_broadcast

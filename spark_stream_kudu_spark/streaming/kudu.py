@@ -4,13 +4,17 @@ The reference upserts to Kudu three ways (KuduContext.upsertRows
 KafkaToKuduJava.java:117-119; datasource writer with UPSERT-on-append
 kafka_to_kudu.py:44-45, KafkaToKuduScala.scala:53-56; SQL INSERT
 kafka_to_kudu.py:48-51). This engine's primary sink is the
-self-contained keyed parquet merge (``sinks.UpsertParquetSink``) so the
+self-contained keyed store (``sinks.UpsertParquetSink``) so the
 test/bench environment needs no external store; this module is the
 drop-in adapter for a *real* Kudu cluster when the ``kudu-spark``
 datasource jar is on the classpath (``--packages
 org.apache.kudu:kudu-spark3_2.12:<ver>``).
 
-Both sinks expose the same ``foreachBatch``-callable interface, but
+Both sinks expose the same ``foreachBatch``-callable interface
+(``sink(batch_df, batch_id)`` and ``read(spark)``), but this adapter
+only stands in for a last-writer-wins store (``combine=None``): Kudu's
+UPSERT replaces rows and has no aggregate merge, and its replay safety
+is per-row idempotence rather than the store's manifest batch id.
 ``run_traffic_pipeline`` (streaming/traffic.py) always writes to an
 ``UpsertParquetSink``; this adapter is a building block for a caller
 that wires its own query to a real cluster:

@@ -16,7 +16,9 @@ Two kinds:
 
 from __future__ import annotations
 
+import glob
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -254,32 +256,31 @@ def stream_traffic_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     checkpoint = os.path.join(base, "ckpt")
     os.makedirs(src_dir, exist_ok=True)
 
-    # Replay fixture: 4 CSV files, one micro-batch each (k = event_id % 4),
-    # records formatted exactly like the reference's producer
-    # (README.md:23: "<epoch_millis>,<count>").
-    rows = (
+    # Replay fixture: one CSV file per event_id % 4 residue class, one
+    # micro-batch each, records formatted exactly like the reference's
+    # producer (README.md:23: "<epoch_millis>,<count>"). Split
+    # executor-side in one scan (the workdir.stage_mod_slices shape:
+    # each class lands in one task, so its directory holds one part
+    # file). An empty class writes no directory and so no file, which
+    # would otherwise hold one empty record -> an all-null parsed row
+    # -> a null-keyed upsert.
+    stage = os.path.join(base, "stage_csv")
+    (
         ev.select(
-            (F.col("event_id") % 4).alias("k"),
+            (F.col("event_id") % 4).alias("_b"),
             F.concat(
                 F.unix_millis("ts").cast("string"),
                 F.lit(","),
                 F.floor("value").cast("int").cast("string"),
-            ).alias("line"),
-            F.col("event_id"),
+            ).alias("value"),
         )
-        .orderBy("event_id")
-        .collect()
+        .repartition(4, "_b")
+        .write.partitionBy("_b")
+        .text(stage)
     )
-    files: dict[int, list[str]] = {0: [], 1: [], 2: [], 3: []}
-    for r in rows:
-        files[r["k"]].append(r["line"])
-    for k, lines in files.items():
-        if not lines:
-            # an empty residue class must not produce a file holding one
-            # empty record -> all-null parsed row -> null-keyed upsert
-            continue
-        with open(os.path.join(src_dir, f"batch_{k}.csv"), "w") as f:
-            f.write("\n".join(lines) + "\n")
+    for part in glob.glob(os.path.join(stage, "_b=*", "part-*")):
+        k = os.path.basename(os.path.dirname(part)).removeprefix("_b=")
+        shutil.move(part, os.path.join(src_dir, f"batch_{k}.csv"))
 
     raw_stream = (
         spark.readStream.schema(TRAFFIC_RAW_SCHEMA)

@@ -1,4 +1,4 @@
-"""Keyed upsert sink — the engine's replacement for the Kudu upsert.
+"""The keyed store — the engine's replacement for the Kudu upsert.
 
 The reference demonstrates the same upsert three ways per batch
 (KuduContext.upsertRows KafkaToKuduJava.java:117-119; datasource writer
@@ -6,44 +6,83 @@ with Kudu UPSERT-on-append semantics kafka_to_kudu.py:44-45,
 KafkaToKuduScala.scala:53-56; SQL INSERT kafka_to_kudu.py:48-51) and
 documents the contract in comments (java:113-115): idempotent,
 last-writer-wins on the primary key ``as_of_time``, safe to re-run.
+Spark's parquet writer has no upsert (SURVEY.md §2.3.4), so this module
+keeps that contract in one class, ``UpsertParquetSink``, a
+``foreachBatch`` target with two parts:
 
-This engine reproduces that contract sink-side (Spark's parquet writer
-has no upsert; Kudu's did — SURVEY.md §2.3.4):
+- **Merge.** A store is a key plus a ``combine``. ``None`` is
+  last-writer-wins (``merge_by_key``, Kudu's UPSERT). An aggregate name
+  (``"sum"``, ``"hll_union_agg"`` or ``"bit_or"``, ``merge_aggregate``)
+  folds each batch's partial values into the stored ones, every
+  non-key column with the same aggregate: an incrementally maintained
+  rollup, HLL sketches or distinct-id bitmaps. Either merge is one key
+  shuffle, issued as ``repartition(NUM_BUCKETS, key)`` so the written
+  store carries the reference's hash layout (``PARTITION BY HASH
+  PARTITIONS 4``, ddl/create_impala_kudu_table.sql:14).
+- **Commit.** Each batch's merged store is written to its own version
+  directory ``v<batch_id>/``. The store's manifest, ``_manifest.json``,
+  names the live version and the batch id it reflects, and it is
+  published with one write-aside-then-``os.replace``. Data and replay
+  marker therefore change in the same step: a crash anywhere leaves
+  either the old version with the old batch id or the new version with
+  the new one, and the batch's replay after a restart redoes or skips
+  it. That is the idempotent sink of Structured Streaming's
+  exactly-once argument; the replayable source and the offset log are
+  Spark's. A version directory the manifest does not name is a crashed
+  attempt's leftover or a superseded version, and the writer deletes it.
+  A crash here is the process dying; nothing is fsynced, so surviving
+  power loss is left to the filesystem, as for Spark's own checkpoint.
 
-- ``merge_by_key``: pure DataFrame-level keyed merge (new rows win) —
-  the unit the oracle checks.
-- ``UpsertParquetSink``: a ``foreachBatch`` target maintaining a keyed
-  parquet table with hash layout on the key (mirrors the DDL's
-  ``PARTITION BY HASH PARTITIONS 4``, ddl/create_impala_kudu_table.sql:14).
-
-Scale note: the merge implementation is merge-on-read-free — it
-rewrites the table per batch, which is right for the reference's
-cardinality (ONE row per 5 s batch; ddl key = second-granular stamp).
-For high-cardinality keyed state at 100 TB you'd swap the store for a
-format with real MERGE (Delta/Iceberg/Hudi or Kudu itself) behind the
-same ``merge_by_key`` semantics; the sink isolates exactly that seam.
+Scale note: every batch rewrites the whole store, which is right for
+the reference's cardinality (one row per 5 s batch). A high-cardinality
+store needs merge-on-read deltas behind the same manifest instead (a
+format with real MERGE, or Kudu itself).
 """
 
 from __future__ import annotations
 
+import json
 import os
+import re
+import shutil
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+#: Hash buckets of every store write (reference ddl:14, HASH PARTITIONS 4).
+NUM_BUCKETS = 4
+
+#: The aggregate ``combine``s. Each is commutative and associative, so a
+#: store's contents do not depend on how the stream was cut into batches.
+_AGGREGATES = {"sum": F.sum, "hll_union_agg": F.hll_union_agg, "bit_or": F.bit_or}
+
 # One sub-batch marker column used to disambiguate replays.
 _BATCH_COL = "__batch_id"
 
+_MANIFEST = "_manifest.json"
+_VERSION_DIR = re.compile(r"v\d+")
+
 # Sentinel distinguishing "caller did not pre-read the store" from "the
-# caller read it and it was missing (None)" in UpsertParquetSink.__call__.
+# caller read it and it was missing (None)" in UpsertParquetSink.compute.
 _READ_STORE = object()
+
+
+def _keys(key: str | list[str]) -> list[str]:
+    return [key] if isinstance(key, str) else list(key)
+
+
+def _shuffle(df: DataFrame, keys: list[str], bucketed: bool) -> DataFrame:
+    """The merge's key exchange: the store's hash layout when
+    ``bucketed``, else left to the aggregate."""
+    return df.repartition(NUM_BUCKETS, *keys) if bucketed else df
 
 
 def merge_by_key(
     current: DataFrame | None,
     updates: DataFrame,
     key: str | list[str],
-    num_buckets: int | None = None,
+    bucketed: bool = False,
 ) -> DataFrame:
     """Last-writer-wins merge of ``updates`` into ``current``.
 
@@ -53,26 +92,19 @@ def merge_by_key(
     wins, matching sequential upserts (requires a deterministic order
     column ``__batch_id`` if present, else arbitrary-but-single).
 
-    Shape (round-11): the merge is ONE keyed aggregate — union both
-    sides with a priority tag (current 0, updates 1) and keep, per key,
-    the max of ``struct(priority, non_keys...)``. Row-for-row identical
-    to the previous dedup -> anti-join -> union form: a key only in one
-    side keeps that side's (deduped) row, a key in both keeps the
-    updates row regardless of content, and duplicate update keys
-    resolve to the same lexicographically-largest non-key tuple the
-    dedup pass picked (struct comparison is field-order left-to-right,
-    priority first). One exchange instead of three (updates dedup +
-    anti-join + layout); with ``num_buckets`` set the exchange is
-    issued as ``repartition(num_buckets, keys)`` so the merged output
-    already carries the store's hash layout (same idiom as
-    ``merge_additive``). Requires orderable non-key columns (no maps),
-    which holds for every sink schema here.
+    The merge is ONE keyed aggregate: union both sides with a priority
+    tag (current 0, updates 1) and keep, per key, the max of
+    ``struct(priority, non_keys...)``. A key only in one side keeps that
+    side's row, a key in both keeps the updates row, and duplicate
+    update keys resolve to the lexicographically-largest non-key tuple
+    (struct comparison is field-order left-to-right, priority first).
+    Requires orderable non-key columns (no maps), which holds for every
+    store schema here.
     """
-    keys = [key] if isinstance(key, str) else list(key)
+    keys = _keys(key)
     had_batch_col = _BATCH_COL in updates.columns
     if had_batch_col:
-        # Explicit arrival order: keep the row of the LATEST batch per
-        # key (window dedup, unchanged pre-round-11 semantics).
+        # Explicit arrival order: keep the row of the LATEST batch per key.
         w = Window.partitionBy(*keys).orderBy(F.col(_BATCH_COL).desc())
         updates = (
             updates.withColumn("__rn", F.row_number().over(w))
@@ -80,11 +112,10 @@ def merge_by_key(
             .drop("__rn", _BATCH_COL)
         )
     non_keys = [c for c in updates.columns if c not in keys]
-    # Output column order replicates the pre-round-11 form exactly: the
-    # surviving-current union put current's order first; the first-batch
-    # struct-max dedup emitted keys-first; the first-batch window dedup
-    # kept updates' own order. The order is load-bearing — it becomes
-    # the store's parquet schema, which later batches read back.
+    # The output column order is load-bearing: it becomes the store's
+    # parquet schema, which later batches read back. An existing store
+    # keeps its order; a first batch keeps the updates' own order when
+    # it was window-deduped or is key-only, and is keys-first otherwise.
     if current is not None:
         out_cols = current.columns
     elif had_batch_col or not non_keys:
@@ -92,18 +123,15 @@ def merge_by_key(
     else:
         out_cols = [*keys, *non_keys]
 
-    def _bucketed(df: DataFrame) -> DataFrame:
-        return df if num_buckets is None else df.repartition(num_buckets, *keys)
-
     if not non_keys:
         # Key-only rows: the merge degenerates to a distinct union.
         both = updates if current is None else current.unionByName(updates)
-        return _bucketed(both).dropDuplicates(keys)
+        return _shuffle(both, keys, bucketed).dropDuplicates(keys)
     tagged = updates.withColumn("__prio", F.lit(1))
     if current is not None:
         tagged = current.withColumn("__prio", F.lit(0)).unionByName(tagged)
     packed = (
-        _bucketed(tagged)
+        _shuffle(tagged, keys, bucketed)
         .groupBy(*keys)
         .agg(
             F.max(
@@ -117,59 +145,89 @@ def merge_by_key(
     return merged.select(*out_cols)
 
 
+def merge_aggregate(
+    current: DataFrame | None,
+    updates: DataFrame,
+    key: str | list[str],
+    combine: str,
+    bucketed: bool = False,
+) -> DataFrame:
+    """Aggregate merge: ``updates`` carries PARTIAL values per key, and
+    each non-key column folds into ``current`` with the ``combine``
+    aggregate (``"sum"``, ``"hll_union_agg"`` or ``"bit_or"``) — the
+    maintenance step of a continuous aggregate. Commutative and
+    associative, so the result is independent of micro-batch
+    boundaries. Output is keys first, then the non-key columns in
+    ``updates``' order."""
+    keys = _keys(key)
+    agg = _AGGREGATES[combine]
+    both = updates if current is None else current.unionByName(updates)
+    return _shuffle(both, keys, bucketed).groupBy(*keys).agg(
+        *[agg(c).alias(c) for c in updates.columns if c not in keys]
+    )
+
+
 class UpsertParquetSink:
-    """``foreachBatch`` sink: keyed parquet table with upsert semantics.
+    """A keyed parquet store, upserted one micro-batch at a time.
 
     Usage::
 
-        sink = UpsertParquetSink(path, key="as_of_time", num_buckets=4)
-        q = (df.writeStream.outputMode("update")
-               .foreachBatch(sink).start())
+        sink = UpsertParquetSink(path, key="as_of_time")          # last-writer-wins
+        rollup = UpsertParquetSink(path, key=["k"], combine="sum")
+        q = df.writeStream.outputMode("update").foreachBatch(sink).start()
 
-    Idempotency: the sink records the last committed batch id in the
-    table directory; replaying an already-committed batch is a no-op,
-    reproducing the reference's replay-safety (java:113-115).
+    A batch lands in two steps. :meth:`compute` runs the Spark job: it
+    merges the batch with the live version into a new version directory
+    and leaves the live store as it is. :meth:`commit` publishes that
+    version by replacing the manifest. Calling the sink does both. A
+    batch id at or below the manifest's is a replay and is skipped,
+    which reproduces the reference's replay-safety (java:113-115).
     """
 
-    #: Aggregate-merge subclasses set this True: their batch inputs are
-    #: by construction partial aggregates — a shuffle runs before the
-    #: first output row — so the empty-batch probe would execute the
-    #: aggregation once and the merge would execute it AGAIN (round-11).
-    #: A lazy lineage cut makes the probe the materializer and the merge
-    #: a read-back. The base last-writer-wins sink stays uncut: its
-    #: inputs are often raw or narrow scan-local plans whose limit-1
-    #: probe is cheaper than a full materialization (callers with
-    #: expensive plans cut at the call site instead).
-    _cut_input = False
-
-    def __init__(self, path: str, key: str | list[str], num_buckets: int = 4):
+    def __init__(
+        self, path: str, key: str | list[str], combine: str | None = None
+    ):
         self.path = path
-        self.key = [key] if isinstance(key, str) else list(key)
-        self.num_buckets = num_buckets
-        self._data = os.path.join(path, "data")
-        self._marker = os.path.join(path, "_last_batch")
-        # Read-back schema, cached after the first inference (round-11):
-        # every merge preserves the column set (unionByName would fail
-        # otherwise), so the store's read schema is fixed for the life
-        # of the sink and re-inferring it per read pays one footer-scan
-        # job per micro-batch for nothing. Cached from an actual
-        # read-back (not from the written DataFrame) so nullability
-        # matches parquet inference exactly.
+        self.key = _keys(key)
+        self.combine = combine
+        # An aggregate's batch input is itself a partial aggregate, whose
+        # shuffle runs before its first row: the empty-batch probe would
+        # run it once and the merge again. A lazy cut makes the probe
+        # materialize it and the merge read it back. Last-writer-wins
+        # inputs are often narrow plans whose limit-1 probe is cheaper
+        # than materializing them (callers with expensive plans cut at
+        # the call site instead).
+        self._cut_input = combine is not None
+        self._manifest = os.path.join(path, _MANIFEST)
+        # Read-back schema, cached after the first inference: every
+        # merge keeps the column set, so the store's read schema is fixed
+        # for the life of the sink. Cached from an actual read-back so
+        # nullability matches parquet inference exactly.
         self._schema = None
+        # Manifest entry of the version compute wrote and commit has not
+        # yet published.
+        self._staged: dict | None = None
 
-    def _last_batch(self) -> int:
+    def _live(self) -> dict | None:
+        """The manifest, ``{"version": "v<id>", "batch_id": <id>}``, or
+        None before the first commit."""
         try:
-            with open(self._marker) as f:
-                return int(f.read().strip())
-        except (FileNotFoundError, ValueError):
-            return -1
+            with open(self._manifest) as f:
+                return json.load(f)
+        except FileNotFoundError:
+            return None
+
+    def _live_dir(self) -> str | None:
+        live = self._live()
+        return None if live is None else os.path.join(self.path, live["version"])
 
     def num_rows(self) -> int | None:
         """Exact row count of the live store from its parquet footers
         (driver-side metadata, no Spark job) — None when the store is
         missing. The cheap source for row bounds fed to size-gated
         joins over the store (a ``count()`` would cost a scan job)."""
-        if not os.path.isdir(self._data):
+        live = self._live_dir()
+        if live is None:
             return None
         import glob
 
@@ -177,108 +235,89 @@ class UpsertParquetSink:
 
         return sum(
             pq.read_metadata(f).num_rows
-            for f in glob.glob(os.path.join(self._data, "*.parquet"))
+            for f in glob.glob(os.path.join(live, "*.parquet"))
         )
 
     def read(self, spark) -> DataFrame | None:
-        # Only a MISSING table reads as empty. Transient read failures
-        # must propagate: swallowing them would make the next merge
-        # treat the table as empty and silently drop all upserted state.
-        if not os.path.isdir(self._data):
+        # Only a store with no manifest reads as empty. A live version
+        # that fails to read must raise: reading it as empty would make
+        # the next merge rewrite the store from nothing.
+        live = self._live_dir()
+        if live is None:
             return None
         if self._schema is not None:
-            return spark.read.schema(self._schema).parquet(self._data)
-        df = spark.read.parquet(self._data)
+            return spark.read.schema(self._schema).parquet(live)
+        df = spark.read.parquet(live)
         self._schema = df.schema
         return df
-
-    def _merge(self, current: DataFrame | None, batch_df: DataFrame) -> DataFrame:
-        """Merge policy — last-writer-wins here; subclasses override
-        (AdditiveRollupSink sum-merges partial aggregates)."""
-        return merge_by_key(current, batch_df, self.key, num_buckets=self.num_buckets)
-
-    def _layout(self, merged: DataFrame) -> DataFrame:
-        """Hash layout on the key before the store write. Every merge
-        policy — last-writer-wins included since round-11 — issues its
-        key shuffle as ``repartition(num_buckets, key)`` feeding its
-        aggregate, so the merged output already carries the store's
-        hash layout (reference ddl:14, HASH PARTITIONS 4) and a second
-        exchange here would be redundant."""
-        return merged
 
     def compute(
         self, batch_df: DataFrame, batch_id: int, current=_READ_STORE
     ) -> bool:
-        """Stage this batch's merged store into the side directory —
-        the Spark job, WITHOUT touching the live table. Returns True
-        iff a staged table is ready for :meth:`commit`.
+        """Write this batch's merged store as version ``v<batch_id>``
+        WITHOUT touching the live one; return True iff a version is
+        ready for :meth:`commit` (False for a replayed or empty batch).
 
-        Compute/commit separation (round-12, guide §2.6): a stream
-        that maintains several stores per batch has data-independent
-        write jobs, but promoting a store mid-flight would yank files
-        out from under any concurrent job still READING it (the
-        credits plan of the semantic-dedup stream reads the member
-        store while the dominator store writes). Staging only reads
-        live directories and writes a private side directory, so any
-        number of sinks may compute concurrently (driver thread pool);
-        the renames happen afterwards, in :meth:`commit`, when no job
-        is in flight."""
+        Computing only reads the live version and writes a new one, so
+        several stores may compute concurrently even when one's input
+        reads another's live version (:func:`upsert_stores`).
+
+        ``current`` is for a caller that already read this store for
+        its own batch logic (e.g. joining new arrivals against the
+        accumulated store before upserting into them): passing that
+        DataFrame plans the store once per batch instead of twice. It
+        must be the unmodified result of ``self.read(spark)`` taken in
+        the same micro-batch, with no write to this sink in between."""
+        live = self._live()
+        if live is not None and batch_id <= live["batch_id"]:
+            return False  # replayed batch: idempotent no-op
         if self._cut_input:
             batch_df = batch_df.localCheckpoint(eager=False)
         # Empty-batch guard (reference O7, kafka_to_kudu.py:23).
         if batch_df.isEmpty():
             return False
-        if batch_id <= self._last_batch():
-            return False  # replayed batch: idempotent no-op
-        spark = batch_df.sparkSession
-        # ``current`` (round-11): a caller that already read this
-        # store's CURRENT version for its own batch logic (e.g. the
-        # incremental-dedup streams join new arrivals against the
-        # accumulated store before upserting into it) passes that
-        # DataFrame here, so the store is listed/planned once per batch
-        # instead of twice. Must be the unmodified result of
-        # ``self.read(spark)`` taken in the same micro-batch, with no
-        # intervening write to this sink.
+        self._drop_unlisted(live)
         if current is _READ_STORE:
-            current = self.read(spark)
-        merged = self._merge(current, batch_df)
-        # Hash layout on the key (reference ddl:14, HASH PARTITIONS 4):
-        # co-locates future merges and bounds file counts. Write to a
-        # side directory then swap — the merge plan reads the current
-        # directory, so an in-place overwrite would corrupt its input.
-        tmp = self._data + ".tmp"
-        self._layout(merged).write.mode("overwrite").parquet(tmp)
-        self._staged_batch = batch_id
+            current = self.read(batch_df.sparkSession)
+        if self.combine is None:
+            merged = merge_by_key(current, batch_df, self.key, bucketed=True)
+        else:
+            merged = merge_aggregate(
+                current, batch_df, self.key, self.combine, bucketed=True
+            )
+        version = f"v{batch_id}"
+        merged.write.mode("overwrite").parquet(os.path.join(self.path, version))
+        self._staged = {"version": version, "batch_id": batch_id}
         return True
 
-    #: Batch id staged by :meth:`compute` and not yet promoted.
-    _staged_batch: int | None = None
+    def _drop_unlisted(self, live: dict | None) -> None:
+        """Delete every version directory but the live one: the output
+        of an attempt that crashed before its commit, or a superseded
+        version whose commit crashed before deleting it."""
+        if not os.path.isdir(self.path):
+            return
+        keep = None if live is None else live["version"]
+        for name in os.listdir(self.path):
+            if _VERSION_DIR.fullmatch(name) and name != keep:
+                shutil.rmtree(os.path.join(self.path, name))
 
     def commit(self) -> None:
-        """Promote the staged table (renames + replay marker). No-op
-        when nothing is staged. Driver-side only — safe to call while
-        OTHER sinks' jobs run, but every job reading THIS store must
-        have finished."""
-        if self._staged_batch is None:
+        """Publish the version :meth:`compute` wrote: write the new
+        manifest aside and ``os.replace`` it over the live one (the one
+        step that changes the store), then delete the superseded
+        version. No-op when nothing is staged. Driver-side only — safe
+        while OTHER stores' jobs run, but every job reading THIS store
+        must have finished."""
+        if self._staged is None:
             return
-        import shutil
-
-        tmp = self._data + ".tmp"
-        # Promote via rename-aside: the previous table is moved to .old
-        # (not deleted) before tmp takes its place, so a crash anywhere
-        # in the window leaves a recoverable copy instead of no table.
-        old = self._data + ".old"
-        if os.path.exists(old):
-            shutil.rmtree(old)
-        if os.path.exists(self._data):
-            os.rename(self._data, old)
-        os.rename(tmp, self._data)
-        if os.path.exists(old):
-            shutil.rmtree(old)
-        os.makedirs(self.path, exist_ok=True)
-        with open(self._marker, "w") as f:
-            f.write(str(self._staged_batch))
-        self._staged_batch = None
+        prev = self._live()
+        tmp = self._manifest + ".tmp"
+        with open(tmp, "w") as f:
+            json.dump(self._staged, f)
+        os.replace(tmp, self._manifest)
+        self._staged = None
+        if prev is not None:
+            shutil.rmtree(os.path.join(self.path, prev["version"]))
 
     def __call__(
         self, batch_df: DataFrame, batch_id: int, current=_READ_STORE
@@ -287,134 +326,24 @@ class UpsertParquetSink:
             self.commit()
 
 
-def merge_additive(
-    current: DataFrame | None,
-    updates: DataFrame,
-    key: str | list[str],
-    sum_cols: list[str],
-    num_buckets: int | None = None,
-) -> DataFrame:
-    """Additive (aggregate-merge) upsert: ``updates`` carries PARTIAL
-    aggregates per key; merging SUMS them into the current table instead
-    of replacing rows — the maintenance step of an incrementally-updated
-    rollup (continuous aggregate). Commutative and associative, so the
-    result is independent of micro-batch boundaries; one shuffle on the
-    key, same as the last-writer-wins merge.
+def upsert_stores(batch_id: int, *writes: tuple) -> None:
+    """Upsert one micro-batch into several stores: compute them
+    concurrently (one driver thread each, so one job's tasks back-fill
+    the executors the other's tail frees), then commit them in the
+    order given.
 
-    ``num_buckets`` (round-11): when set, the key shuffle is issued as
-    ``repartition(num_buckets, keys)`` BEFORE the groupBy — the
-    aggregate's clustered-distribution requirement is satisfied by that
-    partitioning (map-side partial aggregation is unchanged), so the
-    merged output already carries the store's hash layout and the sink
-    skips its separate layout exchange (2 exchanges -> 1 per batch)."""
-    keys = [key] if isinstance(key, str) else list(key)
-    both = updates if current is None else current.unionByName(updates)
-    if num_buckets is not None:
-        both = both.repartition(num_buckets, *keys)
-    return both.groupBy(*keys).agg(
-        *[F.sum(c).alias(c) for c in sum_cols]
-    )
-
-
-class AdditiveRollupSink(UpsertParquetSink):
-    """``foreachBatch`` sink maintaining an incrementally-updated rollup
-    table: each micro-batch's partial aggregates are SUM-merged into the
-    keyed store (vs. the base class's last-writer-wins replacement).
-    Inherits the idempotent-replay marker and the crash-safe rename-aside
-    promotion — replaying a committed batch must NOT double-count."""
-
-    _cut_input = True
-
-    def __init__(
-        self,
-        path: str,
-        key: str | list[str],
-        sum_cols: list[str],
-        num_buckets: int = 4,
-    ):
-        super().__init__(path, key, num_buckets)
-        self.sum_cols = list(sum_cols)
-
-    def _merge(self, current: DataFrame | None, batch_df: DataFrame) -> DataFrame:
-        return merge_additive(
-            current, batch_df, self.key, self.sum_cols,
-            num_buckets=self.num_buckets,
-        )
-
-    def _layout(self, merged: DataFrame) -> DataFrame:
-        # The merge's pre-aggregation repartition already produced the
-        # store's hash layout — a second exchange would be redundant.
-        return merged
-
-
-class SketchUnionSink(UpsertParquetSink):
-    """``foreachBatch`` sink maintaining keyed HLL sketches: each
-    micro-batch's partial sketches are hll_union-merged into the store.
-    Register-wise max is commutative, associative AND idempotent, so the
-    final sketch — and therefore its estimate — is bit-identical for any
-    batch slicing or merge order (stronger than the additive sink, which
-    needs the replay marker to avoid double-counting; the marker is
-    still inherited for IO economy). The streaming cardinality path
-    that never stores identities."""
-
-    _cut_input = True
-
-    def __init__(
-        self,
-        path: str,
-        key: str | list[str],
-        sketch_col: str,
-        num_buckets: int = 4,
-    ):
-        super().__init__(path, key, num_buckets)
-        self.sketch_col = sketch_col
-
-    def _merge(self, current, batch_df):
-        if current is None:
-            base = batch_df
-        else:
-            base = current.select(*batch_df.columns).unionByName(batch_df)
-        # Pre-aggregation repartition = aggregation + layout in one
-        # exchange (see merge_additive).
-        return base.repartition(self.num_buckets, *self.key).groupBy(
-            *self.key
-        ).agg(F.hll_union_agg(self.sketch_col).alias(self.sketch_col))
-
-    def _layout(self, merged: DataFrame) -> DataFrame:
-        return merged
-
-
-class BitmapOrSink(UpsertParquetSink):
-    """``foreachBatch`` sink maintaining keyed bitmap words: each
-    micro-batch's (key, word, mask) partials are bitwise-OR-merged into
-    the store. OR is commutative, associative AND idempotent — the same
-    algebra class as SketchUnionSink's register-max, but the merged
-    bitmap is EXACT: popcount over the final words equals the true
-    distinct count for any batch slicing, merge order, or replay. State
-    is |keys| x |id-space/63| words, never raw identities."""
-
-    _cut_input = True
-
-    def __init__(
-        self,
-        path: str,
-        key: str | list[str],
-        mask_col: str = "mask",
-        num_buckets: int = 4,
-    ):
-        super().__init__(path, key, num_buckets)
-        self.mask_col = mask_col
-
-    def _merge(self, current, batch_df):
-        if current is None:
-            base = batch_df
-        else:
-            base = current.select(*batch_df.columns).unionByName(batch_df)
-        # Pre-aggregation repartition = aggregation + layout in one
-        # exchange (see merge_additive).
-        return base.repartition(self.num_buckets, *self.key).groupBy(
-            *self.key
-        ).agg(F.bit_or(self.mask_col).alias(self.mask_col))
-
-    def _layout(self, merged: DataFrame) -> DataFrame:
-        return merged
+    Each write is ``(sink, batch_df)`` or ``(sink, batch_df, current)``
+    (see :meth:`UpsertParquetSink.compute`). The order matters when one
+    write's input reads another store: that store must come after it.
+    A crash between the commits then leaves the read store unchanged,
+    so the batch's replay recomputes the same input, skips the store
+    that already committed, and commits the other."""
+    with ThreadPoolExecutor(max_workers=len(writes)) as pool:
+        computes = [
+            pool.submit(sink.compute, batch_df, batch_id, *current)
+            for sink, batch_df, *current in writes
+        ]
+        for f in computes:
+            f.result()
+    for sink, *_ in writes:
+        sink.commit()

@@ -214,7 +214,7 @@ def run_traffic_pipeline(
     Returns the started StreamingQuery (O19: caller awaits, py:57-58).
     """
     parsed = parse_traffic(raw_stream)
-    sink = UpsertParquetSink(sink_path, key="as_of_time", num_buckets=4)
+    sink = UpsertParquetSink(sink_path, key="as_of_time")
 
     if mode == "event_time":
         agg = windowed_traffic_aggregate(parsed)

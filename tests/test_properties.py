@@ -127,10 +127,10 @@ def test_rolling_hash_detects_reorder(sess, tokens):
 )
 def test_merge_additive_is_batch_split_independent(sess, rows, cuts):
     """Folding ANY partitioning of the rows into batches through
-    merge_additive yields the same per-key sums as one global groupBy —
-    the property that makes the incremental rollup equal the one-shot
-    batch rollup regardless of micro-batch boundaries."""
-    from spark_stream_kudu_spark.streaming.sinks import merge_additive
+    the sum merge_aggregate yields the same per-key sums as one global
+    groupBy — the property that makes the incremental rollup equal the
+    one-shot batch rollup regardless of micro-batch boundaries."""
+    from spark_stream_kudu_spark.streaming.sinks import merge_aggregate
 
     spark = sess
     bounds = sorted({c for c in cuts if c < len(rows)})
@@ -142,7 +142,7 @@ def test_merge_additive_is_batch_split_independent(sess, rows, cuts):
     state = None
     for batch in batches:
         df = spark.createDataFrame(batch, "k long, n long")
-        state = merge_additive(state, df, key="k", sum_cols=["n"])
+        state = merge_aggregate(state, df, key="k", combine="sum")
     got = {r["k"]: r["n"] for r in state.collect()}
     expected: dict[int, int] = {}
     for k, v in rows:

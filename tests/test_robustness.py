@@ -1,15 +1,24 @@
-"""Failure-mode behavior added in round 2: deterministic duplicate
-resolution in the upsert merge, read errors that propagate instead of
-wiping state, crash-safe table promotion, and loud non-convergence in
-label propagation."""
+"""Failure-mode behavior: deterministic duplicate resolution in the
+upsert merge, read errors that propagate instead of wiping state,
+crash-safe store commits, and loud non-convergence in label
+propagation."""
 
+import builtins
+import contextlib
 import os
+import shutil
+from unittest import mock
 
 import pytest
+from pyspark.sql import DataFrameWriter
 from pyspark.sql import functions as F
 
 from spark_stream_kudu_spark.operators.dedup import propagate_min_labels
-from spark_stream_kudu_spark.streaming.sinks import UpsertParquetSink, merge_by_key
+from spark_stream_kudu_spark.streaming.sinks import (
+    UpsertParquetSink,
+    merge_by_key,
+    upsert_stores,
+)
 
 
 def test_merge_duplicate_keys_resolve_deterministically(spark):
@@ -39,13 +48,19 @@ def test_read_missing_table_is_none(spark, tmp_path):
 
 
 def test_read_corrupt_table_raises(spark, tmp_path):
-    """A table that EXISTS but fails to read must raise — returning None
-    would make the next merge rewrite the store from empty, silently
-    dropping all upserted state."""
+    """A live version that EXISTS but fails to read must raise —
+    returning None would make the next merge rewrite the store from
+    empty, silently dropping all upserted state."""
+    import glob
+
     sink = UpsertParquetSink(str(tmp_path / "t"), key="k")
-    os.makedirs(sink._data)
-    with open(os.path.join(sink._data, "part-00000.parquet"), "w") as f:
-        f.write("this is not parquet")
+    sink(spark.createDataFrame([(1, "x")], "k int, v string"), batch_id=0)
+    parts = glob.glob(os.path.join(sink._live_dir(), "*.parquet"))
+    assert parts
+    for part in parts:
+        with open(part, "w") as f:
+            f.write("this is not parquet")
+    sink = UpsertParquetSink(str(tmp_path / "t"), key="k")  # no cached schema
     with pytest.raises(Exception):
         df = sink.read(spark)
         assert df is not None
@@ -53,16 +68,183 @@ def test_read_corrupt_table_raises(spark, tmp_path):
 
 
 def test_upsert_promotion_leaves_no_stale_dirs(spark, tmp_path):
-    sink = UpsertParquetSink(str(tmp_path / "t"), key="k", num_buckets=2)
+    sink = UpsertParquetSink(str(tmp_path / "t"), key="k")
     b1 = spark.createDataFrame([(1, "x"), (2, "y")], "k int, v string")
     b2 = spark.createDataFrame([(2, "y2"), (3, "z")], "k int, v string")
     sink(b1, batch_id=0)
     sink(b2, batch_id=1)
     table = {r["k"]: r["v"] for r in sink.read(spark).collect()}
     assert table == {1: "x", 2: "y2", 3: "z"}
-    # neither the .tmp nor the .old staging dir survives a clean batch
-    assert not os.path.exists(sink._data + ".tmp")
-    assert not os.path.exists(sink._data + ".old")
+    # only the manifest's version survives a clean batch
+    assert sorted(os.listdir(sink.path)) == ["_manifest.json", "v1"]
+
+
+class _Crash(Exception):
+    """A simulated process crash at an injected point."""
+
+
+# Every filesystem call that can change a store directory.
+_FS_CALLS = [
+    (builtins, "open"),
+    (os, "replace"),
+    (os, "rename"),
+    (os, "remove"),
+    (os, "unlink"),
+    (os, "makedirs"),
+    (shutil, "rmtree"),
+]
+
+
+@contextlib.contextmanager
+def _fs_calls(crash_at=None):
+    """Record the filesystem calls made inside the block, and raise
+    _Crash in place of call number ``crash_at``. A call made inside
+    another one (rmtree's own unlinks) counts as part of it."""
+    calls, depth = [], [0]
+
+    def wrap(fn, name):
+        def inner(*args, **kwargs):
+            if depth[0]:
+                return fn(*args, **kwargs)
+            calls.append(name)
+            if len(calls) - 1 == crash_at:
+                raise _Crash(name)
+            depth[0] += 1
+            try:
+                return fn(*args, **kwargs)
+            finally:
+                depth[0] -= 1
+
+        return inner
+
+    with contextlib.ExitStack() as stack:
+        for mod, name in _FS_CALLS:
+            stack.enter_context(
+                mock.patch.object(mod, name, wrap(getattr(mod, name), name))
+            )
+        yield calls
+
+
+def _write_then_crash():
+    """Patch the Spark parquet write: the version directory is written,
+    then the process "crashes" before anything else happens."""
+    real = DataFrameWriter.parquet
+
+    def parquet(self, *args, **kwargs):
+        real(self, *args, **kwargs)
+        raise _Crash("write")
+
+    return mock.patch.object(DataFrameWriter, "parquet", parquet)
+
+
+# combine -> (schema, batch 0, batch 1, contents after both batches)
+_CRASH_SHAPES = {
+    None: ("k int, v string", [(1, "a"), (2, "b")], [(2, "B"), (3, "c")],
+           {1: "a", 2: "B", 3: "c"}),
+    "sum": ("k int, v long", [(1, 10), (2, 5)], [(1, 5), (3, 7)],
+            {1: 15, 2: 5, 3: 7}),
+}
+
+
+@pytest.mark.parametrize("combine", [None, "sum"])
+def test_store_commit_crash_matrix(spark, tmp_path, combine):
+    """Crash batch 1 at the Spark write of its version directory and at
+    every filesystem call its commit makes; then reopen the store on
+    the same path and replay batch 1, as Spark does after a restart.
+    The store must read its old or its new contents right after the
+    crash, and the no-crash contents after the replay — for a
+    last-writer-wins and a sum store (a sum store double-counts if the
+    data and the replay marker can commit apart)."""
+    schema, rows0, rows1, want = _CRASH_SHAPES[combine]
+    b0 = spark.createDataFrame(rows0, schema)
+    b1 = spark.createDataFrame(rows1, schema)
+    before = {k: v for k, v in rows0}
+
+    def contents(path):
+        df = UpsertParquetSink(path, key="k", combine=combine).read(spark)
+        return {r["k"]: r["v"] for r in df.collect()}
+
+    # A clean run names the commit's filesystem calls.
+    clean = str(tmp_path / "clean")
+    sink = UpsertParquetSink(clean, key="k", combine=combine)
+    sink(b0, 0)
+    assert sink.compute(b1, 1)
+    with _fs_calls() as calls:
+        sink.commit()
+    assert calls, "commit made no filesystem call"
+    assert contents(clean) == want
+
+    for point in ["write", *range(len(calls))]:
+        path = str(tmp_path / f"crash_{point}")
+        sink = UpsertParquetSink(path, key="k", combine=combine)
+        sink(b0, 0)
+        if point == "write":
+            with _write_then_crash(), pytest.raises(_Crash):
+                sink(b1, 1)
+        else:
+            assert sink.compute(b1, 1)
+            with _fs_calls(crash_at=point), pytest.raises(_Crash):
+                sink.commit()
+        assert contents(path) in (before, want), point
+        UpsertParquetSink(path, key="k", combine=combine)(b1, 1)  # the replay
+        assert contents(path) == want, f"crash at {point}"
+
+
+def test_two_store_commit_order_survives_crash_between_commits(spark, tmp_path):
+    """upsert_stores commits in the order given. The count store's
+    input reads the key store, so the key store commits last: a crash
+    between the two commits then replays against an unchanged key store
+    and gives the no-crash contents. Committing the key store first
+    makes the replay read the advanced key store and over-count."""
+    key_batches = [[1, 2], [3]]
+
+    def run(base, order, crash):
+        def open_stores():
+            return {
+                "keys": UpsertParquetSink(os.path.join(base, "keys"), key="k"),
+                "seen": UpsertParquetSink(
+                    os.path.join(base, "seen"), key="name", combine="sum"
+                ),
+            }
+
+        def upsert(stores, batch_id):
+            inputs = {
+                "keys": spark.createDataFrame(
+                    [(k,) for k in key_batches[batch_id]], "k long"
+                ),
+                # reads the key store's live version
+                "seen": spark.createDataFrame(
+                    [("keys_before", stores["keys"].num_rows() or 0)],
+                    "name string, n long",
+                ),
+            }
+            upsert_stores(batch_id, *[(stores[s], inputs[s]) for s in order])
+
+        stores = open_stores()
+        upsert(stores, 0)
+        if crash:
+            real, commits = UpsertParquetSink.commit, []
+
+            def commit(self):
+                commits.append(self)
+                if len(commits) == 2:
+                    raise _Crash("between the commits")
+                real(self)
+
+            with mock.patch.object(UpsertParquetSink, "commit", commit):
+                with pytest.raises(_Crash):
+                    upsert(stores, 1)
+            stores = open_stores()  # restart
+        upsert(stores, 1)
+        return (
+            {r["k"] for r in stores["keys"].read(spark).collect()},
+            {r["name"]: r["n"] for r in stores["seen"].read(spark).collect()},
+        )
+
+    no_crash = run(str(tmp_path / "a"), ("seen", "keys"), crash=False)
+    assert no_crash == ({1, 2, 3}, {"keys_before": 2})
+    assert run(str(tmp_path / "b"), ("seen", "keys"), crash=True) == no_crash
+    assert run(str(tmp_path / "c"), ("keys", "seen"), crash=True) != no_crash
 
 
 def _chain(spark, n):
@@ -151,11 +333,7 @@ def test_repetition_mode_fold_linear_on_long_doc(spark):
 
 
 def test_additive_rollup_replay_does_not_double_count(spark, tmp_path):
-    from spark_stream_kudu_spark.streaming.sinks import AdditiveRollupSink
-
-    sink = AdditiveRollupSink(
-        str(tmp_path / "roll"), key="k", sum_cols=["n"], num_buckets=2
-    )
+    sink = UpsertParquetSink(str(tmp_path / "roll"), key="k", combine="sum")
     b0 = spark.createDataFrame([(1, 10), (2, 5)], "k int, n long")
     b1 = spark.createDataFrame([(1, 3), (3, 7)], "k int, n long")
     sink(b0, batch_id=0)

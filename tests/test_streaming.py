@@ -72,15 +72,14 @@ def test_upsert_sink_idempotent_replay(spark):
 
 
 def test_sink_compute_commit_separation_overlaps_safely(spark):
-    """Round-12 compute/commit split: (a) compute stages the merge
-    WITHOUT touching the live table (a reader planned before compute
-    still resolves); (b) two sinks whose inputs read EACH OTHER's live
-    stores can compute concurrently and commit afterwards — the exact
-    shape (credits plan reads the member store while the dominator
-    store writes) that forbade overlap before the split; (c) commit is
-    a no-op with nothing staged; (d) replay/empty guards live in
-    compute and still hold. Iterated to shake out rename races."""
-    import glob
+    """Compute/commit split: (a) compute writes a new version WITHOUT
+    touching the live one — read() does not see it until commit; (b)
+    two sinks whose inputs read EACH OTHER's live stores can compute
+    concurrently and commit afterwards — the shape of the semantic-dedup
+    stream, whose credits plan reads the member store while the
+    dominator store writes; (c) commit is a no-op with nothing staged;
+    (d) replay/empty guards live in compute and still hold. Iterated to
+    shake out commit races."""
     from concurrent.futures import ThreadPoolExecutor
 
     d = _mkdirs()
@@ -100,11 +99,12 @@ def test_sink_compute_commit_separation_overlaps_safely(spark):
             fa = pool.submit(a.compute, upd_a, batch)
             fb = pool.submit(b.compute, upd_b, batch)
             assert fa.result() and fb.result()
-        # staged, not yet promoted: live tables still show the old batch
-        assert os.path.isdir(a._data + ".tmp")
+        # staged, not yet committed: read() still shows the old batch
+        assert max(r["k"] for r in a.read(spark).collect()) == batch - 1
         a.commit()
         b.commit()
-        assert not glob.glob(os.path.join(d, "*", "data.tmp"))
+        for s in (a, b):
+            assert sorted(os.listdir(s.path)) == ["_manifest.json", f"v{batch}"]
     # replayed batch id: compute refuses, commit stays a no-op
     assert a.compute(spark.createDataFrame([Row(k=9, v=-1)]), 10) is False
     a.commit()
@@ -172,6 +172,46 @@ def test_pipeline_end_to_end(spark, mode):
         # -> many windows; all aggregated state lands in the keyed table
         assert len(rows) > 3
         assert all(r["as_of_time"] % 5000 == 0 for r in rows)
+
+
+def test_pipeline_processing_time_trigger(spark):
+    """The reference's production trigger (O2: processingTime 5 s,
+    kafka_to_kudu.py:17) drains a two-file backlog one file per trigger
+    into the store."""
+    d = _mkdirs()
+    src = os.path.join(d, "csv")
+    os.makedirs(src)
+    base_ms = 1700000000000
+    for k in range(2):
+        with open(os.path.join(src, f"b{k}.csv"), "w") as f:
+            for i in range(10):
+                f.write(f"{base_ms + (k * 10 + i) * 1000},{k * 10 + i}\n")
+    raw = (
+        spark.readStream.schema(TRAFFIC_RAW_SCHEMA)
+        .option("maxFilesPerTrigger", "1")
+        .text(src)
+    )
+    q = run_traffic_pipeline(
+        raw,
+        sink_path=os.path.join(d, "sink"),
+        checkpoint=os.path.join(d, "ckpt"),
+        mode="parity",
+        as_of_time_fn="content",
+        trigger_available_now=False,
+    )
+    try:
+        q.processAllAvailable()
+        assert q.isActive  # unlike availableNow, it keeps waiting for input
+    finally:
+        q.stop()
+    rows = read_traffic_conditions(spark, os.path.join(d, "sink")).collect()
+    assert [
+        (r["as_of_time"], r["min_num_veh"], r["max_num_veh"], r["first_meas_time"])
+        for r in rows
+    ] == [
+        (base_ms + 9000, 0, 9, base_ms),
+        (base_ms + 19000, 10, 19, base_ms + 10000),
+    ]
 
 
 def test_windowed_aggregate_is_incremental_plan(spark):
